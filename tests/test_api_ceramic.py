@@ -104,6 +104,36 @@ def test_api_root_field_dispatch_complete(spark):
     assert lag == {"posts": 5, "profiles": 0}
 
 
+def test_follows_overview_both_directions_and_unknown_id(spark):
+    """One filtered scan serves both directions: an id on both sides of
+    edges gets both lists (a self-follow counts in each), and an id on
+    no edge still gets one row with zero counts and empty lists."""
+    from union_indexer_node_spark.operators import api
+
+    follows = spark.createDataFrame(
+        [("a", "b"), ("c", "a"), ("a", "d"), ("e", "a"), ("a", "a"), ("x", "y")],
+        "follower string, following string",
+    )
+    got = api.follows_overview(follows, {"id": "a"}).collect()
+    assert [r.asDict() for r in got] == [
+        {
+            "followings_count": 3,
+            "followings": ["a", "b", "d"],
+            "followers_count": 3,
+            "followers": ["a", "c", "e"],
+        }
+    ]
+    got = api.follows_overview(follows, {"id": "nobody"}).collect()
+    assert [r.asDict() for r in got] == [
+        {
+            "followings_count": 0,
+            "followings": [],
+            "followers_count": 0,
+            "followers": [],
+        }
+    ]
+
+
 def test_api_nested_enrichment_joins(spark):
     from union_indexer_node_spark import tables
     from union_indexer_node_spark.operators import api

@@ -337,7 +337,6 @@ def test_q15_single_fact_pass(spark):
 # is the correct physical choice (hashing a 1-row side buys nothing):
 #   - o2_* / a1 / text_tfidf_topk: max/total anchor scalar joined back
 #   - o6: corpus-count scalar for the hash-sample threshold
-#   - j7: follower/following totals joined as scalars
 #   - training_token_budget: running-total + budget scalars (3 joins)
 #   - tpch_q22: avg-acctbal scalar subquery (reference shape)
 #   - temporal_range_join: the pinned intentional long arm (see
@@ -359,7 +358,6 @@ _BNLJ_ALLOWED = {
     "training_token_budget": 6,
     "text_tfidf_topk": 2,
     "temporal_range_join": 2,
-    "j7_follows_overview": 2,
     "ann_recall_eval": 4,
     "a1_trending_tags": 2,
     "o2_a8_trending_feed_payout": 2,

@@ -3,14 +3,16 @@
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
+import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from test_ingest import OPS_SCHEMA, T0, comment  # reuse fixture helpers
+from test_ingest import OPS_SCHEMA, T0, comment, follow_op  # reuse fixture helpers
 
 T1 = dt.datetime(2024, 1, 1, 1, 0)
 
@@ -358,6 +360,157 @@ def test_streaming_edit_keeps_created_at_and_backfill_migrates(spark, tmp_path):
     assert not os.path.isdir(
         os.path.join(state_dir, f"created_date={d1}")
     ), "emptied partition must be removed, not left with the stale row"
+
+
+# --- snapshot layout: one data file per partition directory -----------------
+@contextlib.contextmanager
+def _session_conf(spark, conf):
+    """Set SQL confs on the test session for the block only."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# With coalescing off, every shuffled frame keeps spark.sql.shuffle.partitions
+# partitions, so a write that did not cluster by the partition columns would
+# leave one file per (task, partition value).
+_NO_COALESCE = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+
+
+def _files_per_dir(root, prefix):
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(root, d)))
+        for d in os.listdir(root)
+        if d.startswith(prefix)
+    }
+
+
+def test_write_snapshot_one_file_per_partition(spark, tmp_path):
+    from union_indexer_node_spark.sources.sinks import write_snapshot
+
+    path = str(tmp_path / "snap")
+    df = spark.range(300).withColumn(
+        "created_date", F.expr("date_add(DATE'2024-01-01', CAST(id % 3 AS INT))")
+    )
+    write_snapshot(df.repartition(4), path, partition_by=["created_date"])
+    assert _files_per_dir(path, "created_date=") == {
+        f"created_date=2024-01-0{d}": 1 for d in (1, 2, 3)
+    }
+    ids = [r.id for r in spark.read.parquet(path).select("id").collect()]
+    assert sorted(ids) == list(range(300))
+
+
+def test_write_snapshot_splits_oversized_partition(spark, tmp_path):
+    """A date larger than the advisory partition size is written by
+    several tasks, one file each, and no row is lost."""
+    from union_indexer_node_spark.sources.sinks import write_snapshot
+
+    path = str(tmp_path / "snap")
+    # 20,000 rows on 2024-01-01, 10 on 2024-01-02
+    df = spark.range(20_010).withColumn(
+        "created_date",
+        F.when(F.col("id") < 20_000, F.lit(dt.date(2024, 1, 1))).otherwise(
+            F.lit(dt.date(2024, 1, 2))
+        ),
+    )
+    with _session_conf(
+        spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "8k"}
+    ):
+        write_snapshot(df.repartition(4), path, partition_by=["created_date"])
+    files = _files_per_dir(path, "created_date=")
+    assert files["created_date=2024-01-01"] > 1
+    assert files["created_date=2024-01-02"] == 1
+    ids = [r.id for r in spark.read.parquet(path).select("id").collect()]
+    assert sorted(ids) == list(range(20_010))
+
+
+def test_streaming_posts_one_file_per_touched_date(spark, tmp_path):
+    """Posts first load and a later micro-batch whose merged frame has
+    several partitions both leave one file in each date directory."""
+    from union_indexer_node_spark.streaming.stream import (
+        ops_file_stream,
+        start_posts_stream,
+    )
+
+    ops_dir = str(tmp_path / "ops")
+    state_dir = str(tmp_path / "posts_state")
+    ckpt = str(tmp_path / "ckpt")
+    days = [10, 1500, 3000]  # comment(h) stamps T0 + h minutes: 3 dates
+
+    def run(batch_rows, fname):
+        spark.createDataFrame(batch_rows, schema=OPS_SCHEMA).write.parquet(
+            ops_dir + f"/{fname}.parquet"
+        )
+        with _session_conf(spark, _NO_COALESCE):
+            sq = start_posts_stream(
+                spark, ops_file_stream(spark, ops_dir, OPS_SCHEMA), state_dir, ckpt
+            )
+            sq.awaitTermination(120)
+
+    run([comment(days[i % 3] + i, f"a{i}", "p", "v1") for i in range(12)], "f1")
+    want = {f"created_date=2024-01-0{d}": 1 for d in (1, 2, 3)}
+    assert _files_per_dir(state_dir, "created_date=") == want
+
+    # edits of day-1 and day-2 authors plus a new day-2 post
+    run(
+        [
+            comment(4000, "a0", "p", "v2"),
+            comment(4001, "a1", "p", "v2"),
+            comment(1600, "b", "p", "v1"),
+        ],
+        "f2",
+    )
+    assert _files_per_dir(state_dir, "created_date=") == want
+    got = {r.author: r.body for r in spark.read.parquet(state_dir).collect()}
+    assert len(got) == 13
+    assert got["a0"] == got["a1"] == "v2" and got["a2"] == "v1"
+
+
+def test_streaming_follows_one_file_per_touched_bucket(spark, tmp_path):
+    from union_indexer_node_spark.streaming.stream import (
+        follows_view,
+        ops_file_stream,
+        start_follows_stream,
+    )
+
+    ops_dir = str(tmp_path / "ops")
+    state_dir = str(tmp_path / "follows_state")
+
+    def run(batch_rows, fname):
+        spark.createDataFrame(batch_rows, schema=OPS_SCHEMA).write.parquet(
+            ops_dir + f"/{fname}.parquet"
+        )
+        with _session_conf(spark, _NO_COALESCE):
+            sq = start_follows_stream(
+                spark,
+                ops_file_stream(spark, ops_dir, OPS_SCHEMA),
+                state_dir,
+                str(tmp_path / "ckpt"),
+                n_buckets=4,
+            )
+            sq.awaitTermination(120)
+
+    run([follow_op(10 + i, "follow", f"u{i}", f"v{i}", ["blog"]) for i in range(16)], "f1")
+    files = _files_per_dir(state_dir, "_bucket=")
+    assert files and set(files.values()) == {1}
+
+    run(
+        [follow_op(100 + i, "follow", f"w{i}", f"v{i}", ["blog"]) for i in range(6)]
+        + [follow_op(200, "follow", "u0", "v0", [])],
+        "f2",
+    )
+    files = _files_per_dir(state_dir, "_bucket=")
+    assert files and set(files.values()) == {1}
+    live = follows_view(spark.read.parquet(state_dir)).collect()
+    assert len(live) == 16 + 6 - 1
 
 
 # --- multimodal plumbing ----------------------------------------------------

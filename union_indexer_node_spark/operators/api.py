@@ -290,18 +290,22 @@ def community_feed(
 def follows_overview(follows: DataFrame, args: Mapping[str, Any]) -> DataFrame:
     """follows(id) root field (resolvers/index.ts:322-351): both edge
     directions with their counts — the reference's two find() + two
-    countDocuments() collapse into one pass over the (small) filtered
-    edge sets."""
+    countDocuments() collapse into one filtered scan with conditional
+    aggregates. A global aggregate always yields one row, so an unknown
+    id gets counts 0 and empty lists."""
     ident = args["id"]
-    following = follows.filter(F.col("follower") == ident).agg(
-        F.count(F.lit(1)).alias("followings_count"),
-        F.sort_array(F.collect_list("following")).alias("followings"),
+    out_edge = F.col("follower") == ident
+    in_edge = F.col("following") == ident
+    return follows.filter(out_edge | in_edge).agg(
+        F.count(F.when(out_edge, 1)).alias("followings_count"),
+        F.sort_array(F.collect_list(F.when(out_edge, F.col("following")))).alias(
+            "followings"
+        ),
+        F.count(F.when(in_edge, 1)).alias("followers_count"),
+        F.sort_array(F.collect_list(F.when(in_edge, F.col("follower")))).alias(
+            "followers"
+        ),
     )
-    followers = follows.filter(F.col("following") == ident).agg(
-        F.count(F.lit(1)).alias("followers_count"),
-        F.sort_array(F.collect_list("follower")).alias("followers"),
-    )
-    return following.join(followers)
 
 
 def leaderboard(

@@ -41,7 +41,7 @@ from .oracle_common import (  # re-exported: Spark fixtures +
     _passage_oracle,
 )
 from .queries_oracle_sql import ORACLES as _ORACLES
-from .operators import feeds
+from .operators import api, feeds
 from .operators.feeds import FeedSpec
 
 
@@ -1494,14 +1494,11 @@ def j2_parent_post_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ORACLES["j7_follows_overview"],
 )
 def j7_follows_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fol = tables.follows(spark, sf_dir)
-    following = fol.filter(F.col("follower") == "u10").agg(
-        F.count(F.lit(1)).alias("following_count")
+    # the serving operator's counts; column pruning drops its lists
+    return api.follows_overview(tables.follows(spark, sf_dir), {"id": "u10"}).select(
+        F.col("followings_count").alias("following_count"),
+        F.col("followers_count").alias("follower_count"),
     )
-    followers = fol.filter(F.col("following") == "u10").agg(
-        F.count(F.lit(1)).alias("follower_count")
-    )
-    return following.join(followers)
 
 
 # J11 — external chain-state enrichment join + X16 payout choice

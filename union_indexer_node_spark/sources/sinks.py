@@ -19,7 +19,7 @@ the tests drive.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 from ..operators.windows import lww_latest
@@ -47,11 +47,35 @@ def apply_deletes(current: DataFrame, tombstones: DataFrame, keys: list[str]) ->
     return current.join(tombstones.select(*keys).distinct(), keys, "left_anti")
 
 
+def _partitioned_writer(df: DataFrame, cols: list[str]) -> DataFrameWriter:
+    """Overwrite writer for a table partitioned on ``cols``, with its
+    rows clustered by those columns first, so each partition directory
+    gets one file. Unclustered, T writing tasks over D partition values
+    leave up to T*D small files, and every later scan pays to open each
+    one. AQE's rebalance splits a partition larger than
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` over several
+    tasks, so a hot date still writes in parallel, one file per
+    advisory-size slice."""
+    return df.hint("rebalance", *cols).write.mode("overwrite").partitionBy(*cols)
+
+
 def write_snapshot(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> None:
     """Write the new table snapshot. Date-partitioning posts by
     created_at day mirrors the reference's (created_at desc) index
-    intent and gives partition pruning to every trending/window query."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
+    intent and gives partition pruning to every trending/window query.
+    A partitioned snapshot is written one file per partition directory
+    (see ``_partitioned_writer``); an unpartitioned one keeps the
+    frame's own partitioning."""
+    w = _partitioned_writer(df, partition_by) if partition_by else df.write.mode("overwrite")
     w.parquet(path)
+
+
+def overwrite_partitions(df: DataFrame, path: str, partition_by: list[str]) -> None:
+    """Replace only the partitions of ``path`` that ``df`` has rows in
+    (dynamic partition overwrite), one file per partition directory like
+    ``write_snapshot``. A partition ``df`` has no rows for is left as it
+    is: a caller that empties one must remove it itself. ``df`` must not
+    read ``path``; Spark refuses to overwrite a path it is reading."""
+    _partitioned_writer(df, partition_by).option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)

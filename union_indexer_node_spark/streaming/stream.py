@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.posts import apply_first_upload, build_posts
-from ..sources.sinks import upsert, write_snapshot
+from ..sources.sinks import overwrite_partitions, upsert, write_snapshot
 
 
 def ops_file_stream(spark: SparkSession, ops_dir: str, schema: str, *, max_files_per_trigger: int = 1) -> DataFrame:
@@ -73,7 +73,10 @@ def start_posts_stream(
 
     The snapshot is date-partitioned on ``created_date`` and each
     micro-batch REWRITES only the partitions it touches (dynamic
-    partition overwrite) — write cost is O(touched days). The read side
+    partition overwrite) — write cost is O(touched days). Each touched
+    date is rewritten as one file, or one per advisory-size slice of a
+    hot date (``sources.sinks.overwrite_partitions``), however many
+    partitions the merged frame has. The read side
     is honest-O(rows-of-key-columns): finding the old dates / prior
     timestamps of updated keys scans the snapshot's (author, permlink,
     created_at, updated_at, created_date) columns (parquet
@@ -189,12 +192,7 @@ def start_posts_stream(
         # merge result so the write plan no longer reads state_dir —
         # Spark refuses to overwrite a path it is also reading from.
         merged = merged.localCheckpoint()
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("created_date")
-            .parquet(state_dir)
-        )
+        overwrite_partitions(merged, state_dir, ["created_date"])
         surviving = {
             r[0] for r in merged.select("created_date").distinct().collect()
         }
@@ -247,7 +245,8 @@ def start_follows_stream(
     The snapshot is hash-bucketed on the edge key and a micro-batch
     rewrites ONLY the buckets it touches (dynamic partition overwrite)
     — the follows analog of the posts stream's date-bounded rewrite:
-    write cost tracks touched buckets, not table size. The bucket
+    write cost tracks touched buckets, not table size. Each touched
+    bucket is rewritten as one file, as in the posts stream. The bucket
     count is a state-layout constant (changing it means a one-off
     snapshot rewrite), sized so one bucket ≈ one comfortable task."""
     from ..ingest.posts import build_follows
@@ -300,12 +299,7 @@ def start_follows_stream(
         # state_dir while replacing it (same reasoning as the posts
         # stream's localCheckpoint).
         merged = merged.localCheckpoint()
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket")
-            .parquet(state_dir)
-        )
+        overwrite_partitions(merged, state_dir, ["_bucket"])
         # Dynamic partition overwrite skips buckets whose merged output
         # is EMPTY (e.g. _compact dropped a bucket's only rows when a
         # catch-up batch's unfollow fell below high_wm) — the pre-merge
