@@ -261,3 +261,34 @@ def test_ann_lsh_multiprobe_widens(spark):
     # probe-1 candidates superset probe-0's top-k pool at same k
     assert len(r1) >= len(r0)
     assert 0 in r0  # the query vector itself is in its own bucket
+
+
+def test_paginate_keyset_cursor_walk_matches_one_shot(spark):
+    """windows.paginate: walking pages by a 3-key cursor over mixed
+    asc/desc keys (ties on the leading key, and on the first two)
+    reproduces the one-shot order exactly; ``skip`` is ignored once a
+    cursor is set and applies as an offset otherwise."""
+    from union_indexer_node_spark.operators.windows import paginate
+
+    rng = random.Random(7)
+    rows = {(rng.randint(0, 3), rng.choice("xyz"), rng.randint(0, 50))
+            for _ in range(80)}
+    df = spark.createDataFrame(sorted(rows), "a int, b string, c int")
+    order = [("a", True), ("b", False), ("c", True)]
+
+    def keys(frame):
+        return [tuple(r) for r in frame.collect()]
+
+    full = keys(paginate(df, order, limit=len(rows)))
+    assert full == sorted(rows, key=lambda r: (-r[0], r[1], -r[2]))
+    walked, cursor = [], None
+    while True:
+        page = keys(paginate(df, order, limit=7, after=cursor))
+        if not page:
+            break
+        walked += page
+        cursor = page[-1]
+    assert walked == full
+    cursor = full[10]
+    assert keys(paginate(df, order, skip=5, limit=7, after=cursor)) == full[11:18]
+    assert keys(paginate(df, order, skip=5, limit=7)) == full[5:12]

@@ -6,6 +6,9 @@ tests can't see.
 
 from __future__ import annotations
 
+import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -16,14 +19,40 @@ def _plan(df) -> str:
     return qe.sparkPlan().toString() + "\n" + qe.executedPlan().toString()
 
 
-def test_feed_topk_is_take_ordered(spark):
-    """O1: sort+limit must compile to TakeOrderedAndProject (distributed
-    top-k), not a global Sort."""
+_TS = datetime.datetime(2023, 6, 1)
+
+
+@pytest.mark.parametrize(
+    "arm, spec, kwargs",
+    [
+        ("social", {"limit": 20}, {}),
+        ("social", {"limit": 20, "skip": 40}, {}),
+        ("social", {"limit": 20, "after": (_TS, "p")}, {}),
+        ("search", {"limit": 20, "skip": 40}, {}),
+        ("search", {"limit": 20, "skip": 40}, {"rank_by": "bm25"}),
+        ("search", {"limit": 20, "after": (1.5, _TS, "p")},
+         {"rank_by": "bm25", "with_score": True}),
+        ("trending", {"limit": 20, "skip": 40}, {}),
+        ("trending", {"limit": 20, "skip": 40}, {"rank_by": "decayed"}),
+    ],
+    ids=["social", "social-skip", "social-cursor", "search-skip",
+         "bm25-skip", "bm25-cursor", "trending-skip", "decayed-skip"],
+)
+def test_feed_topk_is_take_ordered(spark, arm, spec, kwargs):
+    """O1: sort+skip/limit must compile to TakeOrderedAndProject
+    (distributed top-k), not a global Sort — on every feed arm, with
+    offset and keyset pages alike (all page through windows.paginate)."""
     from union_indexer_node_spark import tables
     from union_indexer_node_spark.operators import feeds
 
     posts = tables.posts(spark, SF_DIR)
-    df = feeds.social_feed(posts, feeds.FeedSpec(limit=20))
+    spec = feeds.FeedSpec(**spec)
+    if arm == "social":
+        df = feeds.social_feed(posts, spec)
+    elif arm == "search":
+        df = feeds.search_feed(posts, "spark", spec, **kwargs)
+    else:
+        df = feeds.trending_feed(posts, spec, **kwargs)
     assert "TakeOrderedAndProject" in _plan(df)
 
 

@@ -2,10 +2,12 @@
 
 `explain()` under AQE shows the INITIAL plan; exchange/stage reuse and
 join-strategy switches only appear in the final adaptive plan after the
-query has run. This runs the named entries to completion via the noop
-sink and prints the executed plan, so duplicated-subtree diagnoses are
-made against what actually ran. Pure diagnostics; never part of the
-driver contract.
+query has run. This runs each named entry's OWN QueryExecution to
+completion and prints its executed plan (``isFinalPlan=true``), so
+duplicated-subtree diagnoses are made against what actually ran. A
+separate action (a noop write, a collect) would plan and run a second
+QueryExecution and leave this one's plan initial. Pure diagnostics;
+not part of the package API.
 
 Usage: python tools/final_plan.py name1 [name2 ...]
 """
@@ -38,10 +40,10 @@ def main() -> None:
     try:
         for n in names:
             fn = bench.EXTRA_BENCH[n] if n in bench.EXTRA_BENCH else reg[n].fn
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            qe = fn(spark, sf_dir)._jdf.queryExecution()
+            qe.toRdd().count()
             print(f"==== {n} (executed/final adaptive plan) ====")
-            print(df._jdf.queryExecution().executedPlan().toString())
+            print(qe.executedPlan().toString())
     finally:
         spark.stop()
 

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .wherefield import and_of, compile_wherefield, or_of
+from .windows import paginate, ranked
 
 # gqlNameMap (resolvers/index.ts:41-48) adapted to our silver schema.
 NAME_MAP = {
@@ -66,16 +67,20 @@ class FeedSpec:
     # reference behavior byte-identical.
     #
     # Round 13: search_feed's BM25 arm additionally accepts a 3-tuple
-    # (score, created_at, permlink) — see _recency_cursor, which every
-    # recency-ordered arm calls so a score cursor aimed at the wrong
-    # arm fails with a clean ValueError, never a tuple-unpack crash.
+    # (score, created_at, permlink). Every arm pages through
+    # windows.paginate; a cursor whose arity does not match the arm's
+    # sort keys fails with a clean ValueError.
     after: tuple[Any, str] | tuple[float, Any, str] | None = None
 
 
-def _recency_cursor(spec: FeedSpec) -> tuple[Any, str]:
-    """Unpack spec.after for a recency-ordered arm, rejecting the
-    3-part BM25 score cursor with a clean validation error."""
-    if len(spec.after) != 2:
+# (created_at DESC, permlink ASC): the reference's feed order
+_RECENCY = [("created_at", True), ("permlink", False)]
+
+
+def _recency_cursor(spec: FeedSpec) -> tuple[Any, str] | None:
+    """spec.after for a recency-ordered arm, rejecting the 3-part BM25
+    score cursor with a clean validation error."""
+    if spec.after is not None and len(spec.after) != 2:
         raise ValueError(
             "a (score, created_at, permlink) cursor applies to the "
             "BM25-ranked search arm only; recency-ordered pages take "
@@ -145,26 +150,10 @@ def social_feed(
             F.col("following").alias("author")
         )
         df = df.join(F.broadcast(following), "author", "left_semi")
-    if spec.after is not None:
-        # strictly-after the cursor row under (created_at DESC,
-        # permlink ASC): older timestamp, or same timestamp with a
-        # later permlink. The timestamp arm is sargable — it reaches
-        # the parquet scan as a pushed filter.
-        c_ts, c_pl = _recency_cursor(spec)
-        df = df.filter(
-            (F.col("created_at") < F.lit(c_ts))
-            | (
-                (F.col("created_at") == F.lit(c_ts))
-                & (F.col("permlink") > F.lit(c_pl))
-            )
-        )
-        return df.orderBy(
-            F.desc("created_at"), F.asc("permlink")
-        ).limit(spec.limit)
-    df = df.orderBy(F.desc("created_at"), F.asc("permlink"))
-    if spec.skip:
-        df = df.offset(spec.skip)
-    return df.limit(spec.limit)
+    return paginate(
+        df, _RECENCY, skip=spec.skip, limit=spec.limit,
+        after=_recency_cursor(spec),
+    )
 
 
 def query_tokens(term: str) -> list[str]:
@@ -278,51 +267,23 @@ def search_feed(
             #          the advertised (created_at, permlink) order
             quantized=False,
         )
-        joined = keyed.join(scored, "_key")
-        if spec.after is not None:
-            # opt-in (score, created_at, permlink) keyset for
-            # score-ranked deep pages (VERDICT r12 item 7 — the same
-            # O(limit)-per-page argument as the r12 recency cursor):
-            # the predicate prunes everything at or before the cursor
-            # BEFORE the sort, so the top-k heap is limit-sized on
-            # every page instead of skip+limit-sized. The score is a
-            # deterministic double of the same plan, so the equality
-            # arms are exact on replay; `skip` is ignored (the cursor
-            # IS the position), matching the recency-cursor contract.
-            c_s, c_ts, c_pl = spec.after
-            sc, ts, pl = F.col("score"), F.col("created_at"), F.col("permlink")
-            joined = joined.filter(
-                (sc < F.lit(float(c_s)))
-                | ((sc == F.lit(float(c_s))) & (ts < F.lit(c_ts)))
-                | (
-                    (sc == F.lit(float(c_s)))
-                    & (ts == F.lit(c_ts))
-                    & (pl > F.lit(c_pl))
-                )
-            )
-        out = joined.orderBy(
-            F.desc("score"), F.desc("created_at"), F.asc("permlink")
-        ).drop("_key", *([] if with_score else ["score"]))
-        if spec.skip and spec.after is None:
-            out = out.offset(spec.skip)
-        return out.limit(spec.limit)
-    if spec.after is not None:
-        # same keyset semantics as social_feed (recency order)
-        c_ts, c_pl = _recency_cursor(spec)
-        df = df.filter(
-            (F.col("created_at") < F.lit(c_ts))
-            | (
-                (F.col("created_at") == F.lit(c_ts))
-                & (F.col("permlink") > F.lit(c_pl))
-            )
+        # opt-in (score, created_at, permlink) keyset for score-ranked
+        # deep pages: the cursor prunes BEFORE the sort, so the top-k
+        # heap is limit-sized on every page. The score is a
+        # deterministic double of the same plan, so the equality arms
+        # are exact on replay.
+        after = spec.after
+        if after is not None:
+            after = (float(after[0]), *after[1:])
+        page = paginate(
+            keyed.join(scored, "_key"), [("score", True), *_RECENCY],
+            skip=spec.skip, limit=spec.limit, after=after,
         )
-        return df.orderBy(
-            F.desc("created_at"), F.asc("permlink")
-        ).limit(spec.limit)
-    df = df.orderBy(F.desc("created_at"), F.asc("permlink"))
-    if spec.skip:
-        df = df.offset(spec.skip)
-    return df.limit(spec.limit)
+        return page.drop("_key", *([] if with_score else ["score"]))
+    return paginate(
+        df, _RECENCY, skip=spec.skip, limit=spec.limit,
+        after=_recency_cursor(spec),
+    )
 
 
 def trending_feed(
@@ -375,36 +336,21 @@ def trending_feed(
         )
     pred = compile_feed_filter(spec)
     df = posts.filter(pred) if pred is not None else posts
-    anchor = df.agg(F.max("created_at").alias("a"))
+    df = df.join(F.broadcast(df.agg(F.max("created_at").alias("a"))))
     if rank_by == "decayed":
-        v_q = F.round(F.coalesce(F.col(key), F.lit(0)) * 100, 0).cast(
-            "long"
+        v_q = F.round(F.coalesce(F.col(key), F.lit(0)) * 100, 0).cast("long")
+        df = df.withColumn(
+            "_score_q", _decayed(v_q, "created_at", "a", half_life_days)
         )
-        units = F.least(
-            F.floor(
-                F.datediff(F.col("a"), F.col("created_at"))
-                / half_life_days
-            ).cast("int"),
-            F.lit(62),
+        order = [("_score_q", True), ("permlink", False)]
+    else:
+        df = df.filter(
+            F.col("created_at")
+            > F.col("a") - F.expr(f"INTERVAL {window_days} DAYS")
         )
-        df = (
-            df.join(F.broadcast(anchor))
-            .withColumn("_vq", v_q * 1_000_000)
-            .withColumn("_u", units)
-            .withColumn("_score_q", F.expr("shiftright(_vq, _u)"))
-            .orderBy(F.desc("_score_q"), F.asc("permlink"))
-            .drop("a", "_vq", "_u", "_score_q")
-        )
-        if spec.skip:
-            df = df.offset(spec.skip)
-        return df.limit(spec.limit)
-    df = df.join(F.broadcast(anchor)).filter(
-        F.col("created_at") > F.col("a") - F.expr(f"INTERVAL {window_days} DAYS")
-    )
-    df = df.orderBy(F.desc(key), F.asc("permlink")).drop("a")
-    if spec.skip:
-        df = df.offset(spec.skip)
-    return df.limit(spec.limit)
+        order = [(key, True), ("permlink", False)]
+    page = paginate(df, order, skip=spec.skip, limit=spec.limit)
+    return page.drop("a", "_score_q")
 
 
 def trending_tags(posts: DataFrame, *, limit: int = 5, window_days: int = 14) -> DataFrame:
@@ -476,31 +422,39 @@ def leaderboard(
     scale) so the output schema stays (username, score, rank). Only
     profiles present in the profiles table appear (inner join on
     username), mirroring the default arm's 'known accounts only'."""
-    from pyspark.sql import Window
-
+    order = [F.desc("score"), F.asc("username")]
     if rank_by == "pagerank":
         if follows is None:
             raise ValueError("rank_by='pagerank' requires the follows table")
         from ..pipelines.training import pagerank_quantized
 
         pr = pagerank_quantized(follows, "follower", "following")
-        ranked = profiles.select("username").join(
+        scored = profiles.select("username").join(
             pr.select(
                 F.col("node").alias("username"),
                 (F.col("pr_q") / 1_000_000).alias("score"),
             ),
             "username",
         )
-        w = Window.orderBy(F.desc("score"), F.asc("username"))
-        return ranked.withColumn("rank", F.row_number().over(w)).select(
-            "username", "score", "rank"
-        )
-    w = Window.orderBy(F.desc("score"), F.asc("username"))
-    return (
-        profiles.filter(F.col("score") > 0)
-        .withColumn("rank", F.row_number().over(w))
-        .select("username", "score", "rank")
+    else:
+        scored = profiles.filter(F.col("score") > 0)
+    return ranked(scored, order).select("username", "score", "rank")
+
+
+def _decayed(
+    v_q: Column, ts_col: str, anchor_col: str, half_life_days: int,
+    scale: int = 1_000_000,
+) -> Column:
+    """Step-decayed integer score ``(v_q * scale) >> units``: units are
+    whole half-lives of age before the anchor, clamped to 62."""
+    units = F.least(
+        F.floor(
+            F.datediff(F.col(anchor_col), F.col(ts_col)) / half_life_days
+        ).cast("int"),
+        F.lit(62),
     )
+    # SQL-form shiftright: the Python builtin only takes literal bits
+    return F.call_function("shiftright", v_q * scale, units)
 
 
 def decayed_trending(
@@ -538,21 +492,9 @@ def decayed_trending(
         if value_col is not None
         else F.lit(100).cast("long")
     )
-    units = F.least(
-        F.floor(
-            F.datediff(F.col("_a"), F.col(ts_col)) / half_life_days
-        ).cast("int"),
-        F.lit(62),
-    )
-    # SQL-form shiftright: the Python builtin only takes literal bits
-    keyed = (
-        df.join(F.broadcast(anchor))
-        .select(
-            F.col(key_col),
-            (v_q * scale).alias("_vq"),
-            units.alias("_u"),
-        )
-        .select(F.col(key_col), F.expr("shiftright(_vq, _u)").alias("_c"))
+    keyed = df.join(F.broadcast(anchor)).select(
+        F.col(key_col),
+        _decayed(v_q, ts_col, "_a", half_life_days, scale).alias("_c"),
     )
     return keyed.groupBy(key_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),

@@ -3,7 +3,9 @@
 The reference has no window functions; these four behaviors are windows
 in disguise (leaderboard rank, last-write-wins upsert ordering,
 first-upload existence check, pagination). Centralized here so ingest
-and the query layer share one implementation.
+and the query layer share one implementation: every feed arm in
+operators/feeds.py pages through ``paginate`` and both leaderboard arms
+rank through ``ranked``.
 """
 
 from __future__ import annotations
@@ -45,12 +47,37 @@ def ranked(df: DataFrame, order: list[Column], rank_col: str = "rank") -> DataFr
     return df.withColumn(rank_col, F.row_number().over(w))
 
 
-def paginate(df: DataFrame, order: list[Column], *, skip: int = 0, limit: int = 100) -> DataFrame:
+def paginate(
+    df: DataFrame,
+    order: list[tuple[str, bool]],
+    *,
+    skip: int = 0,
+    limit: int = 100,
+    after: tuple | None = None,
+) -> DataFrame:
     """W4/O1 — sorted skip/limit feed pagination
-    (resolvers/index.ts:178-183). offset+limit compiles to a global
-    TakeOrderedAndProject (distributed top-k), not a full sort."""
-    out = df.orderBy(*order)
-    if skip:
+    (resolvers/index.ts:178-183). ``order`` lists (column, descending)
+    sort keys. offset+limit compiles to a global TakeOrderedAndProject
+    (distributed top-k), not a full sort.
+
+    ``after`` is a keyset cursor: the key values of the previous page's
+    last row, one per sort key. Rows strictly after it in ``order`` pass
+    (the lexicographic expansion k1 past v1, or k1 = v1 and k2 past v2,
+    ...), and ``skip`` is ignored — the cursor IS the position, so page
+    N costs O(limit) instead of reading and discarding the sorted
+    prefix. A timestamp leading key is sargable: it reaches the parquet
+    scan as a pushed filter."""
+    if after is not None:
+        pred = prefix = None
+        for (name, desc), value in zip(order, after):
+            c, v = F.col(name), F.lit(value)
+            past = c < v if desc else c > v
+            term = past if prefix is None else prefix & past
+            pred = term if pred is None else pred | term
+            prefix = c == v if prefix is None else prefix & (c == v)
+        df = df.filter(pred)
+    out = df.orderBy(*[F.desc(n) if d else F.asc(n) for n, d in order])
+    if skip and after is None:
         out = out.offset(skip)
     return out.limit(limit)
 

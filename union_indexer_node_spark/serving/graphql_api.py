@@ -22,18 +22,13 @@ this behind any HTTP framework; the executor itself is framework-free
 from __future__ import annotations
 
 import datetime as dt
+from functools import partial
 from typing import Any, Mapping
 
+from graphql import GraphQLError, build_schema, graphql_sync
 from pyspark.sql import DataFrame
 
 from ..operators import api as _api
-
-try:  # public dependency, present in most environments; gate anyway
-    from graphql import build_schema, graphql_sync
-
-    HAS_GRAPHQL = True
-except Exception:  # pragma: no cover - absence path
-    HAS_GRAPHQL = False
 
 
 # Query root parity: graphql-v2/schema.ts:308-328. Input types:
@@ -248,6 +243,10 @@ def _rows(df: DataFrame) -> list[dict]:
     return out
 
 
+# root fields whose SDL type is one object, not a list wrapper
+_SINGLE_ROW = {"socialPost", "profile", "community", "follows"}
+
+
 class GraphQLService:
     """Read-only executor for the 11 root fields over published tables.
 
@@ -258,26 +257,16 @@ class GraphQLService:
     """
 
     def __init__(self, **tables: DataFrame) -> None:
-        if not HAS_GRAPHQL:  # pragma: no cover
-            raise ImportError(
-                "graphql-core is required for the serving slice "
-                "(pip install graphql-core)"
-            )
         self._tables = tables
         self._schema = build_schema(SDL)
 
-    # -- field resolvers (root_value callables; graphql-core's default
-    # resolver invokes these with (info, **args)) --
-
-    def _feed(self, field: str, **args: Any) -> dict:
-        flat = _flatten_feed_args(args)
-        df = self._dispatch(field, flat)
-        return {"items": _rows(df)}
-
-    def _one(self, field: str, **args: Any) -> dict | None:
-        flat = _flatten_feed_args(args)
-        rows = _rows(self._dispatch(field, flat))
-        return rows[0] if rows else None
+    def _resolve(self, field: str, info: Any, **args: Any) -> Any:
+        """One root field: flatten the GraphQL args, dispatch, and shape
+        the rows as the SDL's output type."""
+        rows = _rows(self._dispatch(field, _flatten_feed_args(args)))
+        if field in _SINGLE_ROW:
+            return rows[0] if rows else None
+        return {"tags" if field == "trendingTags" else "items": rows}
 
     def _dispatch(self, field: str, flat: Mapping[str, Any]) -> DataFrame:
         """Route through operators/api.execute; a missing required
@@ -286,8 +275,6 @@ class GraphQLService:
         nullable — schema.ts:309-314 — so schema validation can't
         enforce them; its resolvers crash on undefined instead. We keep
         SDL parity and make the failure legible.)"""
-        from graphql import GraphQLError
-
         try:
             return _api.execute(
                 field,
@@ -300,12 +287,12 @@ class GraphQLService:
                 f"{field}: missing required argument {exc}"
             ) from exc
 
-    def _community(self, **args: Any) -> dict | None:
+    def _community(self, info: Any, **args: Any) -> dict | None:
         """community root field with the reference's nested closures
         (resolvers/index.ts:406-454): latestFeed/trendingFeed re-enter
         socialFeed/trendingFeed with byCommunity {_eq: id} injected
         into feedOptions."""
-        row = self._one("community", **args)
+        row = self._resolve("community", info, **args)
         if row is None:
             return None
         cid = args.get("id")
@@ -329,25 +316,11 @@ class GraphQLService:
         return row
 
     def root_value(self) -> dict:
-        return {
-            "socialPost": lambda info, **a: self._one("socialPost", **a),
-            "socialFeed": lambda info, **a: self._feed("socialFeed", **a),
-            "trendingFeed": lambda info, **a: self._feed("trendingFeed", **a),
-            "relatedFeed": lambda info, **a: self._feed("relatedFeed", **a),
-            "searchFeed": lambda info, **a: self._feed("searchFeed", **a),
-            "trendingTags": lambda info, **a: {
-                "tags": _rows(self._dispatch("trendingTags", a))
-            },
-            "profile": lambda info, **a: self._one("profile", **a),
-            "community": lambda info, **a: self._community(**a),
-            "follows": lambda info, **a: self._one("follows", **a),
-            "leaderBoard": lambda info, **a: {
-                "items": _rows(self._dispatch("leaderBoard", a))
-            },
-            "syncState": lambda info, **a: {
-                "items": _rows(self._dispatch("syncState", a))
-            },
-        }
+        # graphql-core's default resolver calls root_value[field](info,
+        # **args)
+        out = {f: partial(self._resolve, f) for f in _api.ROOT_FIELDS}
+        out["community"] = self._community
+        return out
 
     def create_stream_id(self, author: str, permlink: str) -> dict:
         """REST ``POST /api/v1/create_stream_id`` parity

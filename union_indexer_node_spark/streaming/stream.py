@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +43,62 @@ def ops_file_stream(spark: SparkSession, ops_dir: str, schema: str, *, max_files
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .option("recursiveFileLookup", "true")  # block dumps land as dirs
         .parquet(ops_dir)
+    )
+
+
+def _fold_stream(
+    ops_stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    partition_col: str,
+    build: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame | None, DataFrame], tuple[DataFrame, list]],
+):
+    """The micro-batch partition fold both incremental snapshots share.
+
+    Each non-empty batch is ``build`` into new rows; ``merge(current,
+    new)`` returns the rows to write and the partition values they
+    replace (``current`` is None before the first batch). The first
+    batch writes the snapshot; later batches rewrite only the touched
+    partitions (dynamic partition overwrite, one file per partition —
+    ``sources.sinks.overwrite_partitions``). localCheckpoint
+    materializes the merge first: the write plan must not read
+    state_dir while replacing it. A touched partition whose merged
+    output is empty is removed explicitly — dynamic overwrite cannot
+    drop a partition it writes zero rows into, so the stale rows would
+    otherwise survive on disk."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        new = build(batch_df)
+        current = None
+        if os.path.exists(state_dir):
+            try:
+                current = batch_df.sparkSession.read.parquet(state_dir)
+            except Exception:
+                current = None
+        merged, touched = merge(current, new)
+        if current is None:
+            write_snapshot(merged, state_dir, partition_by=[partition_col])
+            return
+        merged = merged.localCheckpoint()
+        overwrite_partitions(merged, state_dir, [partition_col])
+        surviving = {
+            r[0] for r in merged.select(partition_col).distinct().collect()
+        }
+        for p in touched:
+            if p not in surviving:
+                shutil.rmtree(
+                    os.path.join(state_dir, f"{partition_col}={p}"),
+                    ignore_errors=True,
+                )
+
+    return (
+        ops_stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -137,37 +194,9 @@ def start_posts_stream(
             "created_date", F.to_date("created_at")
         )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        import shutil
-
-        new_posts = build_posts(batch_df).withColumn(
-            "created_date", F.to_date("created_at")
-        )
-        spark_b = batch_df.sparkSession
-        current = None
-        if os.path.exists(state_dir):
-            try:
-                current = spark_b.read.parquet(state_dir)
-            except Exception:
-                current = None
-
-        if current is not None and "created_date" not in current.columns:
-            # legacy unpartitioned snapshot: one full rewrite migrates it
-            merged = _merge_with_timestamps(
-                current.withColumn("created_date", F.to_date("created_at")),
-                new_posts,
-            )
-            write_snapshot(merged, state_dir + ".tmp", partition_by=["created_date"])
-            shutil.rmtree(state_dir)
-            os.rename(state_dir + ".tmp", state_dir)
-            return
-
+    def merge(current: DataFrame | None, new_posts: DataFrame):
         if current is None:
-            write_snapshot(new_posts, state_dir, partition_by=["created_date"])
-            return
-
+            return new_posts, []
         touched = _touched_dates(current, new_posts)
         # Full LWW order key inside _merge_with_timestamps: block_height
         # alone ties for same-block edits, making the winner
@@ -187,27 +216,14 @@ def start_posts_stream(
         bystanders = merged.join(
             F.broadcast(batch_authors), "author", "left_anti"
         )
-        merged = apply_first_upload(dirty).unionByName(bystanders)
-        # localCheckpoint materializes the (touched-partitions-only)
-        # merge result so the write plan no longer reads state_dir —
-        # Spark refuses to overwrite a path it is also reading from.
-        merged = merged.localCheckpoint()
-        overwrite_partitions(merged, state_dir, ["created_date"])
-        surviving = {
-            r[0] for r in merged.select("created_date").distinct().collect()
-        }
-        for d in touched:
-            if d not in surviving:
-                shutil.rmtree(
-                    os.path.join(state_dir, f"created_date={d}"),
-                    ignore_errors=True,
-                )
+        return apply_first_upload(dirty).unionByName(bystanders), touched
 
-    return (
-        ops_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_stream(
+        ops_stream, state_dir, checkpoint_dir, "created_date",
+        lambda batch: build_posts(batch).withColumn(
+            "created_date", F.to_date("created_at")
+        ),
+        merge,
     )
 
 
@@ -262,29 +278,15 @@ def start_follows_stream(
             ~(F.col("is_unfollow") & (F.col("block_height") < high_wm))
         )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sp = batch_df.sparkSession
-        new_edges = build_follows(
-            batch_df, keep_tombstones=True
-        ).withColumn(
+    def build(batch_df: DataFrame) -> DataFrame:
+        return build_follows(batch_df, keep_tombstones=True).withColumn(
             "_bucket",
             F.pmod(F.crc32(F.col("_id")), F.lit(n_buckets)).cast("int"),
         )
-        current = None
-        if os.path.exists(state_dir):
-            try:
-                current = sp.read.parquet(state_dir)
-            except Exception:
-                current = None
+
+    def merge(current: DataFrame | None, new_edges: DataFrame):
         if current is None:
-            write_snapshot(
-                _compact(new_edges, new_edges),
-                state_dir,
-                partition_by=["_bucket"],
-            )
-            return
+            return _compact(new_edges, new_edges), []
         touched = [
             r[0] for r in new_edges.select("_bucket").distinct().collect()
         ]
@@ -294,32 +296,13 @@ def start_follows_stream(
             ["_id"],
             [F.col("block_height"), F.col("tx_idx"), F.col("op_idx")],
         )
-        merged = _compact(merged, new_edges)
-        # Materialize before overwrite: the write plan must not read
-        # state_dir while replacing it (same reasoning as the posts
-        # stream's localCheckpoint).
-        merged = merged.localCheckpoint()
-        overwrite_partitions(merged, state_dir, ["_bucket"])
-        # Dynamic partition overwrite skips buckets whose merged output
-        # is EMPTY (e.g. _compact dropped a bucket's only rows when a
-        # catch-up batch's unfollow fell below high_wm) — the pre-merge
-        # bucket would survive on disk and resurrect beaten follows.
-        # Mirror the posts stream's surviving/rmtree loop.
-        surviving = {
-            r[0] for r in merged.select("_bucket").distinct().collect()
-        }
-        for b in touched:
-            if b not in surviving:
-                shutil.rmtree(
-                    os.path.join(state_dir, f"_bucket={b}"),
-                    ignore_errors=True,
-                )
+        # _compact can empty a touched bucket (a catch-up batch's
+        # unfollow fell below high_wm); the fold removes it so the
+        # pre-merge bucket cannot resurrect beaten follows.
+        return _compact(merged, new_edges), touched
 
-    return (
-        ops_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_stream(
+        ops_stream, state_dir, checkpoint_dir, "_bucket", build, merge
     )
 
 
