@@ -400,42 +400,16 @@ def _bench_search_query(spark, sf_dir):
     )
 
 
-_BM25_SERVE_STATE: dict = {}
-
-
-def _bm25_serve_prebuilt(spark, sf_dir):
-    """Posts + persisted BM25 index for the serving searchFeed arm —
-    built once per sf_dir outside any timed region (deployment
-    amortizes the index across queries; bm25_index_merge maintains it
-    across ingest cycles)."""
-    if sf_dir not in _BM25_SERVE_STATE:
-        from pyspark.sql import functions as F
-
-        from union_indexer_node_spark import tables
-        from union_indexer_node_spark.pipelines.search import bm25_index
-
-        posts = tables.posts(spark, sf_dir)
-        key = F.concat_ws("/", F.col("author"), F.col("permlink"))
-        postings, doclens = bm25_index(
-            posts.withColumn("_key", key), "body", "_key"
-        )
-        postings = postings.persist()
-        postings.count()
-        doclens = doclens.persist()
-        doclens.count()
-        _BM25_SERVE_STATE[sf_dir] = (posts, (postings, doclens))
-    return _BM25_SERVE_STATE[sf_dir]
-
-
 def _bench_searchfeed_bm25_query(spark, sf_dir):
-    """The rankBy=BM25 serving arm against the PREBUILT index — the
-    per-request cost a deployment pays (match filter + term-pruned
-    scoring + top-k), not the index build."""
+    """The rankBy=BM25 serving arm as a request runs it: match filter,
+    one-pass scoring over the matched posts and the top-k. The term
+    "hello" matches 9.1% of posts at sf0.1 (9,091 of 100,000)."""
+    from union_indexer_node_spark import tables
     from union_indexer_node_spark.operators.feeds import FeedSpec, search_feed
 
-    posts, frames = _bm25_serve_prebuilt(spark, sf_dir)
     return search_feed(
-        posts, "body", FeedSpec(limit=20), rank_by="bm25", bm25_frames=frames
+        tables.posts(spark, sf_dir), "hello", FeedSpec(limit=20),
+        rank_by="bm25",
     )
 
 

@@ -161,3 +161,37 @@ def test_community_nested_feed_injects_by_community(service):
 def test_unknown_field_is_a_graphql_error(service):
     body = service.execute("query { nope { x } }")
     assert body.get("errors")
+
+
+def test_bm25_search_builds_lazily_and_holds_no_state(spark, service, monkeypatch):
+    """A rankBy: BM25 searchFeed request starts no Spark job while its
+    DataFrame is constructed, and repeated requests leave no persistent
+    RDD behind (no per-request checkpointed index)."""
+    from union_indexer_node_spark.serving import graphql_api
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None) or [-1])
+
+    at_collect = []
+    real_rows = graphql_api._rows
+
+    def rows(df):
+        at_collect.append(last_job())
+        return real_rows(df)
+
+    monkeypatch.setattr(graphql_api, "_rows", rows)
+    query = (
+        'query { searchFeed(searchTerm: "hello", rankBy: "BM25",'
+        " pagination: {limit: 5}) { items { permlink score } } }"
+    )
+    persistent = sc._jsc.sc().getPersistentRDDs().size()
+    for _ in range(3):
+        before = last_job()
+        body = service.execute(query)
+        assert "errors" not in body, body
+        assert body["data"]["searchFeed"]["items"]
+        assert at_collect[-1] == before, "construction started a job"
+    assert sc._jsc.sc().getPersistentRDDs().size() == persistent

@@ -56,6 +56,37 @@ def test_feed_topk_is_take_ordered(spark, arm, spec, kwargs):
     assert "TakeOrderedAndProject" in _plan(df)
 
 
+@pytest.mark.parametrize(
+    "spec, kwargs",
+    [
+        ({"limit": 20, "skip": 40}, {}),
+        ({"limit": 20, "after": (1.5, _TS, "p")}, {"with_score": True}),
+    ],
+    ids=["skip", "cursor"],
+)
+def test_search_bm25_scores_matched_rows_in_one_pass(spark, spec, kwargs):
+    """The BM25 search arm scores the matched rows directly: no token
+    explode (Generate), no posting join (SortMergeJoin), and one shuffle
+    Exchange — the 1-row corpus-stats aggregate, broadcast back as a
+    scalar — ahead of the TakeOrderedAndProject top-k."""
+    import re
+
+    from union_indexer_node_spark import tables
+    from union_indexer_node_spark.operators import feeds
+
+    posts = tables.posts(spark, SF_DIR)
+    df = feeds.search_feed(
+        posts, "spark", feeds.FeedSpec(**spec), rank_by="bm25", **kwargs
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan
+    assert "SortMergeJoin" not in plan
+    assert re.findall(r"(?<!Broadcast)Exchange \w+", plan) == [
+        "Exchange SinglePartition"
+    ]
+    assert "TakeOrderedAndProject" in plan
+
+
 def test_follower_feed_broadcast_semi(spark):
     """J4: the follower's following-list must broadcast; the posts side
     must not shuffle for the semi-join."""

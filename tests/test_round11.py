@@ -597,20 +597,108 @@ def test_search_feed_bm25_arm_reranks_recency_default_unchanged(spark):
     assert "p4" not in recency and "p4" not in bm25
 
 
-def test_search_feed_bm25_prebuilt_index_matches_inline(spark):
-    from union_indexer_node_spark.operators.feeds import FeedSpec, search_feed
-    from union_indexer_node_spark.pipelines.search import bm25_index
+def _bm25_index_page(posts, term, spec, *, any_term=False):
+    """The index formulation the BM25 arm of search_feed replaced: a
+    corpus-wide bm25_index, narrowed to the filter-passing keys and
+    scored by bm25_topk(quantized=False), then paginated. Kept here only
+    as the reference the one-pass arm must reproduce."""
+    from union_indexer_node_spark.operators.feeds import (
+        _RECENCY, compile_feed_filter, query_tokens,
+    )
+    from union_indexer_node_spark.operators.wherefield import and_of, or_of
+    from union_indexer_node_spark.operators.windows import paginate
+    from union_indexer_node_spark.pipelines.search import bm25_index, bm25_topk
 
-    posts = _mk_posts(spark)
+    terms = query_tokens(term)
+    split = F.split(F.lower(F.col("body")), "[^a-z0-9]+")
+    combine = or_of if any_term else and_of
+    df = posts.filter(combine([F.array_contains(split, t) for t in terms]))
+    df = df.filter(compile_feed_filter(spec))
     key = F.concat_ws("/", F.col("author"), F.col("permlink"))
-    frames = bm25_index(posts.withColumn("_key", key), "body", "_key")
-    spec = FeedSpec(limit=3)
-    inline = [r["permlink"] for r in
-              search_feed(posts, "spark", spec, rank_by="bm25").collect()]
-    prebuilt = [r["permlink"] for r in
-                search_feed(posts, "spark", spec, rank_by="bm25",
-                            bm25_frames=frames).collect()]
-    assert inline == prebuilt
+    keyed = df.withColumn("_key", key)
+    postings, doclens = bm25_index(posts.withColumn("_key", key), "body", "_key")
+    keys = keyed.select("_key")
+    scored = bm25_topk(
+        postings.join(keys, "_key", "left_semi"),
+        doclens.join(keys, "_key", "left_semi"),
+        "_key", terms, k=None, quantized=False,
+    )
+    after = spec.after
+    if after is not None:
+        after = (float(after[0]), *after[1:])
+    return paginate(
+        keyed.join(scored, "_key"), [("score", True), *_RECENCY],
+        skip=spec.skip, limit=spec.limit, after=after,
+    ).drop("_key")
+
+
+def _tied_posts(spark, n=400, seed=7):
+    """Seeded corpus with heavy ties: a 6-word vocabulary, bodies of 0-6
+    tokens (some empty), 8 distinct timestamps, 3 apps, every 5th post a
+    comment."""
+    import datetime
+    import random
+
+    rng = random.Random(seed)
+    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+    base = datetime.datetime(2024, 6, 1)
+    rows = [
+        (
+            f"a{i % 7}", f"p{i:04d}",
+            base + datetime.timedelta(hours=i % 8),
+            " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 6))),
+            f"app{i % 3}",
+            ["comment"] if i % 5 == 0 else None,
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "author string, permlink string, created_at timestamp, "
+        "body string, app_name string, flags array<string>",
+    ).withColumn("TYPE", F.lit(None).cast("string"))
+
+
+def test_search_feed_bm25_one_pass_matches_index_path(spark):
+    """The one-pass BM25 arm returns the index formulation's pages
+    exactly, rows and score doubles, on a tie-heavy corpus: multi-term
+    AND and any_term, a feed filter, skip, and a 3-key cursor walk."""
+    from union_indexer_node_spark.operators.feeds import FeedSpec, search_feed
+
+    posts = _tied_posts(spark).localCheckpoint()
+    cases = [
+        ("alpha", FeedSpec(limit=5000), False),
+        ("alpha beta", FeedSpec(limit=5000), False),
+        ("beta gamma delta", FeedSpec(limit=5000, include_comments=True), True),
+        ("zeta nomatch", FeedSpec(limit=5000), True),
+        ("gamma eps", FeedSpec(limit=5000, where={"byApp": {"_eq": "app1"}}), False),
+        ("delta alpha", FeedSpec(limit=9, skip=17), True),
+    ]
+    for term, spec, any_term in cases:
+        got = search_feed(posts, term, spec, any_term=any_term,
+                          rank_by="bm25", with_score=True).collect()
+        want = _bm25_index_page(posts, term, spec, any_term=any_term).collect()
+        assert got == want, (term, any_term)
+        assert got, (term, any_term)
+
+    # 3-key cursor walk: pages of 40 concatenate to the full ordering,
+    # and the first cursor pages equal the index formulation's
+    term, spec = "alpha beta", FeedSpec(limit=5000)
+    full = _bm25_index_page(posts, term, spec, any_term=True).collect()
+    walked, after = [], None
+    while True:
+        step = FeedSpec(limit=40, after=after)
+        page = search_feed(posts, term, step, any_term=True, rank_by="bm25",
+                           with_score=True).collect()
+        if len(walked) < 120:
+            assert page == _bm25_index_page(
+                posts, term, step, any_term=True).collect()
+        if not page:
+            break
+        walked += page
+        last = page[-1]
+        after = (last["score"], last["created_at"], last["permlink"])
+    assert walked == full
 
 
 def test_graphql_search_feed_rankby_both_arms(spark):

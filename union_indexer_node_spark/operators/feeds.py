@@ -24,7 +24,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any, Mapping
 
 from pyspark.sql import Column, DataFrame
@@ -173,7 +175,6 @@ def search_feed(
     *,
     any_term: bool = False,
     rank_by: str = "recency",
-    bm25_frames: tuple[DataFrame, DataFrame] | None = None,
     with_score: bool = False,
 ) -> DataFrame:
     """searchFeed (resolvers/index.ts:199-216): Mongo $text over body,
@@ -190,17 +191,16 @@ def search_feed(
 
     ``rank_by="bm25"`` (round 11, opt-in — default stays the
     reference's recency sort): rank the matching, filter-passing posts
-    by Okapi BM25 (pipelines/search.bm25_topk, the double-precision
-    production arm) instead of created_at; ties break on
-    (created_at DESC, permlink ASC). Pass ``bm25_frames`` — the
-    (postings, doclens) pair from ``search.bm25_index`` over the posts
-    body keyed by 'author/permlink' — to serve from a MAINTAINED index
-    (the deployment shape: the index is built once per ingest cycle
-    and amortized across queries; without it the index subplan builds
-    in-query, correct but a full corpus tokenize per request).
-    Postings are narrowed to the filter-passing keys with a semi-join
-    before scoring, so idf/df reflect the SEARCHABLE subset and the
-    top-k is computed after every feed filter applies.
+    by Okapi BM25 instead of created_at; ties break on
+    (created_at DESC, permlink ASC). Scoring is one pass over those
+    posts: each row carries its doc length and one term frequency per
+    query term, and one 1-row aggregate over the same rows (N, total
+    length, df per term) joins back as a broadcast scalar; the term
+    formula is the one ``pipelines/search.bm25_topk(quantized=False)``
+    uses. So idf/df, N and avgdl reflect the SEARCHABLE subset, the
+    top-k is computed after every feed filter applies, and no index is
+    built per request. Each row is scored on its own: duplicate
+    (author, permlink) rows are not merged.
 
     BM25 deep pages (round 13, opt-in): ``spec.after`` may be a
     3-tuple (score, created_at, permlink) — the last row of the
@@ -244,28 +244,43 @@ def search_feed(
             "skip/limit or by a (score, created_at, permlink) cursor"
         )
     if rank_by == "bm25":
-        from ..pipelines.search import bm25_index, bm25_topk
+        from ..pipelines.dedup import tokens as doc_tokens
+        from ..pipelines.search import _bm25_term
 
-        key = F.concat_ws("/", F.col("author"), F.col("permlink"))
-        keyed = df.withColumn("_key", key)
-        if bm25_frames is None:
-            postings, doclens = bm25_index(
-                posts.withColumn("_key", key), "body", "_key"
-            )
-        else:
-            postings, doclens = bm25_frames
-        keys = keyed.select("_key")
-        # BOTH frames narrow to the filter-passing keys (ADVICE r11):
-        # with postings-only narrowing, df is subset-scoped while
-        # N/total_dl/avgdl stay corpus-level — mixed stats populations.
-        scored = bm25_topk(
-            postings.join(keys, "_key", "left_semi"),
-            doclens.join(keys, "_key", "left_semi"),
-            "_key",
-            terms,
-            k=None,  # cut AFTER the join so boundary ties resolve by
-            #          the advertised (created_at, permlink) order
-            quantized=False,
+        # every statistic comes from the matched rows themselves:
+        # nothing corpus-wide is tokenized, exploded or joined
+        qterms = sorted(set(terms))
+        toks = doc_tokens(F.col("body"))
+        tfs = [f"_tf{i}" for i in range(len(qterms))]
+        dfs = [f"_df{i}" for i in range(len(qterms))]
+
+        def term_freq(t: str) -> Column:
+            return F.size(F.filter(toks, lambda x: x == F.lit(t)))
+
+        rows = df.select(
+            "*",
+            F.size(toks).alias("_dl"),
+            *[term_freq(t).alias(c) for t, c in zip(qterms, tfs)],
+        )
+        stats = rows.agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.sum("_dl").alias("_total_dl"),
+            *[F.count(F.when(F.col(tf) > 0, 1)).alias(d)
+              for tf, d in zip(tfs, dfs)],
+        )
+        score = reduce(
+            operator.add,
+            [
+                F.when(
+                    F.col(tf) > 0,
+                    _bm25_term(F.col(tf), F.col("_dl"), F.col("_n"),
+                               F.col("_total_dl"), F.col(d)),
+                ).otherwise(F.lit(0.0))
+                for tf, d in zip(tfs, dfs)
+            ],
+        )
+        scored = rows.crossJoin(F.broadcast(stats)).withColumn(
+            "score", F.round(score, 6)
         )
         # opt-in (score, created_at, permlink) keyset for score-ranked
         # deep pages: the cursor prunes BEFORE the sort, so the top-k
@@ -276,10 +291,13 @@ def search_feed(
         if after is not None:
             after = (float(after[0]), *after[1:])
         page = paginate(
-            keyed.join(scored, "_key"), [("score", True), *_RECENCY],
+            scored, [("score", True), *_RECENCY],
             skip=spec.skip, limit=spec.limit, after=after,
         )
-        return page.drop("_key", *([] if with_score else ["score"]))
+        return page.drop(
+            "_dl", "_n", "_total_dl", *tfs, *dfs,
+            *([] if with_score else ["score"]),
+        )
     return paginate(
         df, _RECENCY, skip=spec.skip, limit=spec.limit,
         after=_recency_cursor(spec),

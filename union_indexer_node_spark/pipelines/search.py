@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import tokens
@@ -241,6 +241,29 @@ def bm25_index_merge(
     )
 
 
+def _bm25_term(
+    tf: Column,
+    dl: Column,
+    n: Column,
+    total_dl: Column,
+    df: Column,
+    *,
+    k1_pct: int = 120,
+    b_pct: int = 75,
+) -> Column:
+    """One query term's double-precision Okapi BM25 contribution,
+    idf(t) * tf * (k1+1) / (tf + k1*(1-b + b*dl*N/total_dl)) with the
+    ln(1 + (N-df+0.5)/(df+0.5)) idf. The one copy of the formula: the
+    ``quantized=False`` arm of ``bm25_topk`` and the BM25 arm of
+    ``operators.feeds.search_feed`` both score with it, so a term's
+    double is the same in both on equal statistics."""
+    k1 = k1_pct / 100.0
+    b = b_pct / 100.0
+    idf = F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
+    den = tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl * n / total_dl)
+    return idf * tf * F.lit(k1 + 1.0) / den
+
+
 def bm25_topk(
     postings: DataFrame,
     doclens: DataFrame,
@@ -280,9 +303,10 @@ def bm25_topk(
       documented trade for a bit-exact cross-engine score). The
       idf*num product runs in decimal(38,0) (HUGEINT in DuckDB): the
       BIGINT envelope would only hold to ~sf1.
-    - ``quantized=False``: the standard ln idf in doubles — the
-      production scoring arm; last-ulp engine-dependent, so not the
-      oracle path.
+    - ``quantized=False``: the standard ln idf in doubles, scored by
+      ``_bm25_term`` — the same term formula the BM25 arm of
+      ``operators.feeds.search_feed`` serves with; last-ulp
+      engine-dependent, so not the oracle path.
 
     Plan shape: postings pruned to the query terms (pushable IN
     filter), per-term df as a <= len(terms)-row broadcast, corpus
@@ -330,20 +354,12 @@ def bm25_topk(
             .orderBy(F.col("score_q").desc(), F.col(id_col))
         )
         return out if k is None else out.limit(k)
-    k1 = k1_pct / 100.0
-    b = b_pct / 100.0
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("_n") - F.col("_df") + F.lit(0.5))
-        / (F.col("_df") + F.lit(0.5))
-    )
-    den = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b)
-        + F.lit(b) * F.col("dl") * F.col("_n") / F.col("_total_dl")
-    )
     scored = per.select(
         F.col(id_col),
-        (idf * F.col("tf") * F.lit(k1 + 1.0) / den).alias("_ts"),
+        _bm25_term(
+            F.col("tf"), F.col("dl"), F.col("_n"), F.col("_total_dl"),
+            F.col("_df"), k1_pct=k1_pct, b_pct=b_pct,
+        ).alias("_ts"),
     )
     out = (
         scored.groupBy(id_col)
