@@ -104,6 +104,25 @@ def test_api_root_field_dispatch_complete(spark):
     assert lag == {"posts": 5, "profiles": 0}
 
 
+def test_watermark_state_rows_from_literals(spark):
+    """syncState's table is built from literals: the same rows and
+    types as before, none for no entries, and no Python-side RDD in the
+    plan (serving it starts no Python worker)."""
+    from union_indexer_node_spark.ingest.incremental import watermark_state
+
+    state = watermark_state(spark, {"posts": (95, 100), "big": (2**40, 2**40 + 1)})
+    assert state.dtypes == [
+        ("table_name", "string"), ("watermark", "bigint"),
+        ("source_watermark", "bigint"),
+    ]
+    assert sorted(map(tuple, state.collect())) == [
+        ("big", 2**40, 2**40 + 1), ("posts", 95, 100),
+    ]
+    assert watermark_state(spark, {}).count() == 0
+    plan = state._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+
+
 def test_follows_overview_both_directions_and_unknown_id(spark):
     """One filtered scan serves both directions: an id on both sides of
     edges gets both lists (a self-follow counts in each), and an id on

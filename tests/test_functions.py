@@ -211,30 +211,38 @@ def test_ingest_permutation_invariance(spark):
 
 
 def test_editfold_dmp_patch_applier(spark):
-    """X13 — the minimal dmp patch applier: well-formed patches apply
-    exactly; malformed or mismatching patches fall back to replacement
-    (the reference's own failure path, hive-stream.ts:540-548)."""
-    from union_indexer_node_spark.ingest.editfold import _apply_patch
+    """X13 — the exact-offset dmp patch applier: well-formed patches
+    apply exactly; malformed or mismatching patches fall back to
+    replacement (the reference's own failure path,
+    hive-stream.ts:540-548)."""
+    from union_indexer_node_spark.ingest.editfold import apply_patch
 
     base = "hello world, this is the body"
-    # dmp patch text: replace 'world' with 'there' (context-bearing)
-    patch = "@@ -1,16 +1,16 @@\n hello \n-world\n+there\n , this is\n"
-    assert _apply_patch(base, patch) == "hello there, this is the body"
-
-    # insertion at the end
-    patch2 = "@@ -25,5 +25,9 @@\n  body\n+ now\n"
-    assert _apply_patch(base, patch2) == "hello world, this is the body now"
-
-    # context mismatch -> verbatim fallback
+    # (patch, expected): the first is dmp patch text replacing 'world'
+    # with 'there' (context-bearing)
     bad = "@@ -1,16 +1,16 @@\n goodbye \n-world\n+there\n , this\n"
-    assert _apply_patch(base, bad) == bad
-
-    # non-patch body -> verbatim (the common full-body case)
-    assert _apply_patch(base, "just a new body") == "just a new body"
-
-    # %-encoded payloads (dmp encodes specials)
-    patch3 = "@@ -1,5 +1,5 @@\n-hello\n+h%C3%A9llo\n"
-    assert _apply_patch(base, patch3) == "héllo world, this is the body"
+    cases = [
+        ("@@ -1,16 +1,16 @@\n hello \n-world\n+there\n , this is\n",
+         "hello there, this is the body"),
+        # insertion at the end
+        ("@@ -25,5 +25,9 @@\n  body\n+ now\n",
+         "hello world, this is the body now"),
+        # context mismatch -> verbatim fallback
+        (bad, bad),
+        # non-patch body -> verbatim (the common full-body case)
+        ("just a new body", "just a new body"),
+        # %-encoded payloads (dmp encodes specials)
+        ("@@ -1,5 +1,5 @@\n-hello\n+h%C3%A9llo\n",
+         "héllo world, this is the body"),
+    ]
+    df = spark.createDataFrame(
+        [(i, base, p) for i, (p, _) in enumerate(cases)],
+        "i int, base string, patch string",
+    )
+    got = dict(
+        df.select("i", apply_patch(F.col("base"), F.col("patch"))).collect()
+    )
+    assert [got[i] for i in range(len(cases))] == [e for _, e in cases]
 
 
 def test_ann_lsh_multiprobe_widens(spark):

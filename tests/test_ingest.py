@@ -205,7 +205,8 @@ def test_lww_and_editfold(spark, ops):
     p1 = posts.filter((F.col("author") == "alice") & (F.col("permlink") == "post1")).collect()[0]
     assert p1.title == "t-post1"
     assert p1.block_height == 30  # W2: height 30 wins despite row order
-    # X13 without diff_match_patch: last full body wins
+    # X13: none of the later bodies is a patch, so each replaces the
+    # body verbatim and the last one wins
     assert p1.body == "v3 body final"
     assert p1.created_at == T0 + dt.timedelta(minutes=10)
     assert p1.updated_at == T0 + dt.timedelta(minutes=30)

@@ -151,6 +151,35 @@ def test_exact_dedup_single_shuffle(spark):
     assert plan.count("Scan parquet") == 2  # once per half of _plan()
 
 
+def test_posts_build_plans_no_python(spark):
+    """X13 folds edits with built-in expressions: neither build_posts
+    nor the posts stream's batch build (first batch, or folding into a
+    snapshot) plans a Python evaluation node."""
+    from test_ingest import OPS_SCHEMA, comment
+
+    from union_indexer_node_spark.ingest.posts import build_posts
+
+    def python_nodes(df):
+        plan = _plan(df)
+        return plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
+
+    ops = spark.createDataFrame(
+        [
+            comment(10, "a", "p", "v1 body"),
+            comment(20, "a", "p", "@@ -1,2 +1,2 @@\n-v1\n+v2"),
+            comment(30, "b", "r", "reply", parent=("a", "p")),
+        ],
+        schema=OPS_SCHEMA,
+    )
+    assert python_nodes(build_posts(ops)) == 0
+
+    from union_indexer_node_spark.streaming.stream import build_posts_batch
+
+    snapshot = build_posts_batch(ops, None)
+    assert python_nodes(snapshot) == 0
+    assert python_nodes(build_posts_batch(ops, snapshot)) == 0
+
+
 def test_lww_single_shuffle(spark):
     """W2 LWW is one hash-shuffle on the key + in-partition sort."""
     from union_indexer_node_spark.operators.windows import lww_latest

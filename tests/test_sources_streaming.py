@@ -574,6 +574,54 @@ def test_streaming_same_block_edit_tiebreak(spark, tmp_path):
     assert len(rows) == 1 and rows[0].body == "early-tx"
 
 
+def test_streaming_reply_under_snapshot_parent_is_allowed(spark, tmp_path):
+    """J9 across batches: a reply landing in a later batch under a
+    parent already in the snapshot, an edit of such a reply, and a reply
+    to that edited reply are allowed, as in the one-shot build."""
+    from union_indexer_node_spark.ingest.posts import build_posts
+    from union_indexer_node_spark.streaming.stream import (
+        ops_file_stream,
+        start_posts_stream,
+    )
+
+    ops_dir = str(tmp_path / "ops")
+    state_dir = str(tmp_path / "posts_state")
+    ckpt = str(tmp_path / "ckpt")
+    base = [
+        comment(10, "alice", "root", "root body"),
+        comment(11, "bob", "r1", "reply one", parent=("alice", "root")),
+        comment(12, "mallory", "bad", "x", app="other/1.0"),
+    ]
+    delta = [
+        comment(20, "carol", "r2", "reply two", parent=("alice", "root")),
+        comment(21, "bob", "r1", "reply one, edited", parent=("alice", "root")),
+        comment(22, "dave", "r3", "deep", parent=("bob", "r1")),
+        comment(23, "erin", "r4", "under bad", parent=("mallory", "bad")),
+    ]
+    for i, rows in enumerate((base, delta)):
+        spark.createDataFrame(rows, schema=OPS_SCHEMA).write.parquet(
+            ops_dir + f"/f{i}.parquet"
+        )
+        start_posts_stream(
+            spark, ops_file_stream(spark, ops_dir, OPS_SCHEMA), state_dir, ckpt
+        ).awaitTermination(120)
+
+    def view(df):
+        return {
+            (r.author, r.permlink): (r.allowed_by_parent, r.body)
+            for r in df.collect()
+        }
+
+    streamed = view(spark.read.parquet(state_dir))
+    one_shot = view(
+        build_posts(spark.createDataFrame(base + delta, schema=OPS_SCHEMA))
+    )
+    assert streamed == one_shot
+    assert streamed[("bob", "r1")] == (True, "reply one, edited")
+    assert streamed[("carol", "r2")][0] and streamed[("dave", "r3")][0]
+    assert not streamed[("erin", "r4")][0]
+
+
 def test_stream_exact_dedup_null_texts_pass_through(spark, tmp_path):
     """Distinct NULL-text docs must NOT collapse into one (md5(NULL) is
     NULL and null keys would compare equal in the dedup state)."""

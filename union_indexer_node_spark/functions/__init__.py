@@ -1,8 +1,8 @@
 """Scalar/expression library (SURVEY §2.8, X1-X22).
 
 Everything here returns pyspark Column expressions built from built-in
-functions — JVM-side, whole-stage-codegen-eligible. The only Python UDF
-in the engine lives in ingest/editfold.py (X13).
+functions — JVM-side, whole-stage-codegen-eligible. The X13 edit fold
+(ingest/editfold.py) is built-in expressions too.
 """
 
 from .scalars import (  # noqa: F401

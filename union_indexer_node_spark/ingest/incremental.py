@@ -58,11 +58,24 @@ def watermark_state(spark, entries: dict[str, tuple]) -> DataFrame:
     """The syncState backing table (reference stats doc,
     resolvers/index.ts:352-362): one row per derived table with the
     watermark it has incorporated and the newest source watermark seen —
-    their difference is the lag the reference reports as blockLag."""
+    their difference is the lag the reference reports as blockLag.
+
+    Built from literals (``inline``), not ``createDataFrame`` over a
+    Python list, whose rows are unpickled by Python workers: serving it
+    starts none."""
     rows = [
-        (name, int(incorporated), int(source_seen))
+        F.struct(
+            F.lit(str(name)).alias("table_name"),
+            F.lit(int(incorporated)).alias("watermark"),
+            F.lit(int(source_seen)).alias("source_watermark"),
+        )
         for name, (incorporated, source_seen) in entries.items()
     ]
-    return spark.createDataFrame(
-        rows, "table_name string, watermark long, source_watermark long"
+    return spark.range(1).select(
+        F.inline(
+            F.array(*rows).cast(
+                "array<struct<table_name:string,watermark:bigint,"
+                "source_watermark:bigint>>"
+            )
+        )
     )

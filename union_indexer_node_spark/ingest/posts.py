@@ -16,15 +16,18 @@ becomes a deterministic batch plan:
 
 Scale notes: one shuffle on (author, permlink) services the fold, the
 LWW window and the vote join (co-partitioned aggregate-then-join). The
-J9 fixpoint joins comments against an allowed-keys set that starts as
-top-level posts and grows down reply chains; iterations are bounded by
-max reply depth (reference gets the same closure implicitly from
-time-ordered processing).
+edit fold is built-in expressions (``editfold.py``): no Python worker.
+The J9 fixpoint joins comments against a frontier that starts as
+top-level posts and moves down reply chains one level per job, ending
+at the first empty level or max reply depth (reference gets the same
+closure implicitly from time-ordered processing).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.json_meta import parse_json_metadata
@@ -35,6 +38,7 @@ from ..functions.scalars import (
     pullout_ipfs_links,
     storage_type,
 )
+from ..pipelines.similarity import _free_local_checkpoint
 from .editfold import folded_body
 
 def _order():
@@ -118,8 +122,19 @@ def apply_first_upload(posts: DataFrame) -> DataFrame:
     )
 
 
-def build_posts(ops: DataFrame, *, max_reply_depth: int = 16) -> DataFrame:
-    """ops: FIXTURES.md raw_ops schema (comment + vote rows used)."""
+def build_posts(
+    ops: DataFrame,
+    *,
+    max_reply_depth: int = 16,
+    known_allowed: DataFrame | None = None,
+) -> DataFrame:
+    """ops: FIXTURES.md raw_ops schema (comment + vote rows used).
+
+    ``known_allowed``: (author, permlink) keys already allowed by the
+    J9 closure outside ``ops`` — the snapshot an incremental batch folds
+    into. A comment here that replies to one of them is allowed like a
+    reply to a root here. None (the one-shot build) means ``ops`` is the
+    whole history."""
     benef, auth = _intra_tx_enrichments(ops)
     comments = (
         ops.filter(F.col("op_type") == "comment")
@@ -214,54 +229,79 @@ def build_posts(ops: DataFrame, *, max_reply_depth: int = 16) -> DataFrame:
     # localCheckpoint: roots feeds both the level-1 fixpoint join and
     # the final all_allowed union — without materializing this (narrow,
     # key-only) frame, each consumer re-executes the whole upstream
-    # plan including the editfold Arrow UDF, the engine's most
-    # expensive stage.
+    # plan: the LWW and edit-fold window over every comment event.
     roots = (
         posts.filter(~is_comment & allowed_by_type)
         .select(F.col("author").alias("pa"), F.col("permlink").alias("pp"))
         .localCheckpoint()
     )
-    # Fixpoint hygiene: the (narrow) comment key set is persisted — it is
-    # re-joined every level — and each level plus the accumulated set is
-    # localCheckpoint'd so iteration N does not re-execute the N-1 prior
-    # joins (and the whole upstream editfold window) per count() action.
+    # The (narrow) comment key set is persisted — it is re-joined every
+    # level.
     comment_keys = (
         posts.filter(is_comment)
         .select("author", "permlink", "parent_author", "parent_permlink")
         .persist()
     )
-    allowed_keys = roots
-    allowed_comments = None
+    frontier = roots
+    if known_allowed is not None:
+        # Allowed parents outside ``ops`` start the closure like roots:
+        # only those the comments here reply to (broadcast semi-join),
+        # and none of the keys ``ops`` itself rebuilds.
+        parents = (
+            comment_keys.select(
+                F.col("parent_author").alias("author"),
+                F.col("parent_permlink").alias("permlink"),
+            )
+            .distinct()
+            .join(
+                ops.filter(F.col("op_type") == "comment").select(*key),
+                key,
+                "left_anti",
+            )
+        )
+        seeds = known_allowed.select(*key).join(
+            F.broadcast(parents), key, "left_semi"
+        )
+        frontier = roots.unionByName(
+            seeds.select(F.col("author").alias("pa"), F.col("permlink").alias("pp"))
+        )
+    # Every key has one parent, so a comment sits on at most one level
+    # (its reply depth below the frontier): the levels are disjoint and
+    # the closure ends at the first empty one. Each level is
+    # localCheckpoint'd so the next does not re-execute the prior joins;
+    # the checkpoint job also counts its rows (observe), so finding the
+    # empty level costs no job of its own.
+    levels = []
     for _ in range(max_reply_depth):
-        newly = (
+        rows = Observation()
+        level = (
             comment_keys.join(
-                allowed_keys.hint("broadcast"),
+                frontier.hint("broadcast"),
                 (comment_keys.parent_author == F.col("pa"))
                 & (comment_keys.parent_permlink == F.col("pp")),
                 "left_semi",
             )
             .select(F.col("author").alias("pa"), F.col("permlink").alias("pp"))
+            .observe(rows, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
-        if allowed_comments is None:
-            allowed_comments = newly
-            prev_count = newly.count()
-        else:
-            grown = (
-                allowed_comments.unionByName(newly).distinct().localCheckpoint()
-            )
-            new_count = grown.count()
-            if new_count == prev_count:
-                break
-            allowed_comments, prev_count = grown, new_count
-        allowed_keys = newly
-        if prev_count == 0:
+        levels.append(level)
+        if rows.get["n"] == 0:
             break
+        frontier = level
     comment_keys.unpersist()
 
-    all_allowed = roots if allowed_comments is None else roots.unionByName(
-        allowed_comments
-    ).distinct()
+    # One checkpoint of the allowed keys outlives this call (the result
+    # reads it); the per-level ones are freed here. Coalesced: the union
+    # has the partitions of every level.
+    n_parts = int(posts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    all_allowed = (
+        functools.reduce(DataFrame.unionByName, levels, roots)
+        .coalesce(n_parts)
+        .localCheckpoint()
+    )
+    for done in (roots, *levels):
+        _free_local_checkpoint(done)
     posts = posts.join(
         all_allowed.withColumnRenamed("pa", "author").withColumnRenamed(
             "pp", "permlink"

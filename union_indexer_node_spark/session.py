@@ -67,9 +67,9 @@ def get_spark(
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 
-    # Python workers unpickle our pandas UDFs by module reference
-    # (ingest/editfold.py); make the package importable in workers even
-    # when the driver runs from another cwd.
+    # Python workers unpickle our pandas functions by module reference
+    # (e.g. pipelines/multimodal.py); make the package importable in
+    # workers even when the driver runs from another cwd.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pythonpath = os.environ.get("PYTHONPATH", "")
     if repo_root not in pythonpath.split(os.pathsep):

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.posts import apply_first_upload, build_posts
+from ..pipelines.similarity import _free_local_checkpoint
 from ..sources.sinks import overwrite_partitions, upsert, write_snapshot
 
 
@@ -51,19 +52,21 @@ def _fold_stream(
     state_dir: str,
     checkpoint_dir: str,
     partition_col: str,
-    build: Callable[[DataFrame], DataFrame],
+    build: Callable[[DataFrame, DataFrame | None], DataFrame],
     merge: Callable[[DataFrame | None, DataFrame], tuple[DataFrame, list]],
 ):
     """The micro-batch partition fold both incremental snapshots share.
 
-    Each non-empty batch is ``build`` into new rows; ``merge(current,
-    new)`` returns the rows to write and the partition values they
-    replace (``current`` is None before the first batch). The first
-    batch writes the snapshot; later batches rewrite only the touched
-    partitions (dynamic partition overwrite, one file per partition —
-    ``sources.sinks.overwrite_partitions``). localCheckpoint
-    materializes the merge first: the write plan must not read
-    state_dir while replacing it. A touched partition whose merged
+    Each non-empty batch is ``build(batch, current)`` into new rows,
+    materialized once (localCheckpoint) for the merge's several reads;
+    ``merge(current, new)`` returns the rows to write and the partition
+    values they replace (``current`` is None before the first batch).
+    The first batch writes the snapshot; later batches rewrite only the
+    touched partitions (dynamic partition overwrite, one file per
+    partition — ``sources.sinks.overwrite_partitions``).
+    localCheckpoint materializes the merge first: the write plan must
+    not read state_dir while replacing it. Both checkpoints are freed
+    once the batch is written. A touched partition whose merged
     output is empty is removed explicitly — dynamic overwrite cannot
     drop a partition it writes zero rows into, so the stale rows would
     otherwise survive on disk."""
@@ -71,34 +74,47 @@ def _fold_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        new = build(batch_df)
         current = None
         if os.path.exists(state_dir):
             try:
                 current = batch_df.sparkSession.read.parquet(state_dir)
             except Exception:
                 current = None
+        new = build(batch_df, current).localCheckpoint()
         merged, touched = merge(current, new)
         if current is None:
             write_snapshot(merged, state_dir, partition_by=[partition_col])
-            return
-        merged = merged.localCheckpoint()
-        overwrite_partitions(merged, state_dir, [partition_col])
-        surviving = {
-            r[0] for r in merged.select(partition_col).distinct().collect()
-        }
-        for p in touched:
-            if p not in surviving:
-                shutil.rmtree(
-                    os.path.join(state_dir, f"{partition_col}={p}"),
-                    ignore_errors=True,
-                )
+        else:
+            merged = merged.localCheckpoint()
+            overwrite_partitions(merged, state_dir, [partition_col])
+            surviving = {
+                r[0] for r in merged.select(partition_col).distinct().collect()
+            }
+            for p in touched:
+                if p not in surviving:
+                    shutil.rmtree(
+                        os.path.join(state_dir, f"{partition_col}={p}"),
+                        ignore_errors=True,
+                    )
+            _free_local_checkpoint(merged)
+        _free_local_checkpoint(new)
 
     return (
         ops_stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def build_posts_batch(batch: DataFrame, current: DataFrame | None) -> DataFrame:
+    """The posts stream's rows for one micro-batch: ``build_posts`` over
+    the batch's ops, with the snapshot's allowed keys (``current``, None
+    before the first batch) seeding the J9 reply closure, plus the
+    ``created_date`` partition column."""
+    known = None if current is None else current.filter(F.col("allowed_by_parent"))
+    return build_posts(batch, known_allowed=known).withColumn(
+        "created_date", F.to_date("created_at")
     )
 
 
@@ -121,6 +137,15 @@ def start_posts_stream(
     replacement-body fallback applies; a full deterministic rebuild
     (the batch pipeline) remains the reconciliation path, exactly like
     the reference's reindex twin worker (hive-stream-reindex.ts).
+
+    The J9 reply closure of a batch starts from the batch's allowed
+    roots and from the snapshot's allowed posts its comments reply to
+    (``build_posts_batch``), so a reply or an edit landing after its
+    parent is allowed exactly as in the full build. Rows outside the
+    batch are not re-derived: a reply that lands BEFORE its parent keeps
+    allowed_by_parent=false when the parent arrives later, and so do the
+    snapshot descendants of a post an edit re-types. The full batch
+    rebuild reconciles both, as it does the cross-batch body folds.
 
     Cross-batch aggregates are inherited, not recomputed: a later
     batch's build_posts sees only that batch's events, so its
@@ -220,10 +245,7 @@ def start_posts_stream(
 
     return _fold_stream(
         ops_stream, state_dir, checkpoint_dir, "created_date",
-        lambda batch: build_posts(batch).withColumn(
-            "created_date", F.to_date("created_at")
-        ),
-        merge,
+        build_posts_batch, merge,
     )
 
 
@@ -278,7 +300,7 @@ def start_follows_stream(
             ~(F.col("is_unfollow") & (F.col("block_height") < high_wm))
         )
 
-    def build(batch_df: DataFrame) -> DataFrame:
+    def build(batch_df: DataFrame, current: DataFrame | None) -> DataFrame:
         return build_follows(batch_df, keep_tombstones=True).withColumn(
             "_bucket",
             F.pmod(F.crc32(F.col("_id")), F.lit(n_buckets)).cast("int"),
