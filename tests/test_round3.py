@@ -1,118 +1,14 @@
-"""Round-3 regression tests: driver-window curation, fixpoint lineage
-truncation, and the w1 rounding-order alignment.
+"""Round-3 regression tests: fixpoint lineage truncation, the w1
+rounding-order alignment and the f10 point lookup.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from union_indexer_node_spark import queries as q
 
 from conftest import SF_DIR
-
-# Window-curation policy pin, updated per round: entries that have
-# never seen the driver's oracle MUST be inside the 50-entry window
-# (unless the round's rotation plan explicitly births them in the tail
-# with a named entry date — queries.py:_DEPRIORITIZED), plus entries
-# whose green row must be re-earned, plus the policy keeps. Rationale
-# for every swap lives at queries.py:_DEPRIORITIZED; the r8 targets
-# this list previously held are driver-green in CORRECTNESS_r08.json.
-MUST_BE_IN_WINDOW = [
-    # r15 rotation (queries.py:_DEPRIORITIZED "ROUND 15 ROTATION"):
-    # the 49 obligations (a)+(b)+(c)+(d); the 50th slot is the
-    # deliberate spare, filled in insertion order by the first entry
-    # of the pre-named r16 tranche (w2_lww_latest_event) — not pinned
-    # here because it is not an r15 obligation.
-    # (c) the 4 deferred r9-era entries (at bound+1, must not slip)
-    "w3_first_event_per_user",
-    "o6_related_feed_sample",
-    "x21_search_feed",
-    "x21_inverted_index_search",
-    # (d) the 28-entry r10-era staleness tranche (last green r10)
-    "o2_trending_feed_comments",
-    "f9_missing_field",
-    "a5_creator_score",
-    "x16_asset_parse",
-    "skew_salted_distinct_count",
-    "dedup_apply_keep_canonical",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q13_custdist",
-    "tpch_q17_small_quantity",
-    "ann_lsh_signatures",
-    "text_repetition_stats",
-    "text_pii_scrub",
-    "pipeline_domain_mix",
-    "temporal_sessionize",
-    "text_hashtag_url_extract",
-    "sim_label_centroids",
-    "training_chunk_sliding",
-    "text_length_percentiles",
-    "sim_quantize_int8",
-    "offchain_id_refresh",
-    "stream_ssj_watermark_eviction",
-    "text_lm_quality_score",
-    "dedup_semantic_flags",
-    "community_updateprops_merge",
-    "multimodal_png_probe",
-    "setop_intersect_except",
-    "lineitem_unpivot_measures",
-    # (b) the 13 displaced r13-singles
-    "multimodal_dhash_near_dup",
-    "multimodal_audio_fingerprint",
-    "pipeline_diff_minhash_chain",
-    "sketch_cm_heavy_hitters",
-    "sketch_sample_quantiles",
-    "curation_remove_frequent_lines",
-    "sim_kmeans_incremental",
-    "ingest_follows_audit",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_profit",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_cnt",
-    "tpch_q20_part_promotion",
-    # (a) the 4 r14 tail-borns (never driver-checked)
-    "tpch_q12_shipmode",
-    "fuzzy_blocking_recall_eval",
-    "graph_triangle_incremental",
-    "tpch_q21_waiting_supplier",
-]
-
-
-def test_driver_window_holds_every_target_query():
-    reg = list(q.registry())
-    window = set(reg[:50])
-    missing = [n for n in MUST_BE_IN_WINDOW if n not in window]
-    assert not missing, f"outside the driver's 50-entry window: {missing}"
-
-
-def test_deprioritized_entries_exist_and_sort_last():
-    reg = list(q.registry())
-    for name in q._DEPRIORITIZED:
-        assert name in reg, f"deprioritized entry {name} vanished"
-    tail = reg[len(reg) - len(q._DEPRIORITIZED):]
-    assert set(tail) == set(q._DEPRIORITIZED)
-    # every deprioritized entry keeps its local oracle (except the
-    # rows-only HLL entry, which has none by design)
-    for name in q._DEPRIORITIZED:
-        if name != "a_approx_distinct_users":
-            assert q.registry()[name].oracle is not None
-
-
-def test_window_is_exactly_full():
-    """202 entries, 153 deprioritized: the r15 rotation curates 49 of
-    the 50 slots (one slot DELIBERATELY spare — zero r15 births; the
-    50th driver slot is then filled in insertion order by the first
-    pre-named r16-tranche entry, a free bonus re-green). Adding a new
-    entry without curating the window should fail loudly here rather
-    than silently push a verified query out."""
-    reg = list(q.registry())
-    assert len(reg) - len(q._DEPRIORITIZED) == 49, (
-        f"{len(reg)} entries minus {len(q._DEPRIORITIZED)} deprioritized "
-        "must equal the r15 rotation's 49 curated window slots; "
-        "re-curate _DEPRIORITIZED"
-    )
 
 
 def test_j9_fixpoint_lineage_truncated(spark):

@@ -577,7 +577,9 @@ def test_streaming_same_block_edit_tiebreak(spark, tmp_path):
 def test_streaming_reply_under_snapshot_parent_is_allowed(spark, tmp_path):
     """J9 across batches: a reply landing in a later batch under a
     parent already in the snapshot, an edit of such a reply, and a reply
-    to that edited reply are allowed, as in the one-shot build."""
+    to that edited reply are allowed, as in the one-shot build. A patch
+    edit of a published post applies to its stored body, once: a replay
+    of the batch against the result leaves every body as it is."""
     from union_indexer_node_spark.ingest.posts import build_posts
     from union_indexer_node_spark.streaming.stream import (
         ops_file_stream,
@@ -597,9 +599,12 @@ def test_streaming_reply_under_snapshot_parent_is_allowed(spark, tmp_path):
         comment(21, "bob", "r1", "reply one, edited", parent=("alice", "root")),
         comment(22, "dave", "r3", "deep", parent=("bob", "r1")),
         comment(23, "erin", "r4", "under bad", parent=("mallory", "bad")),
+        comment(24, "mallory", "bad", "@@ -1,1 +1,10 @@\n x\n+, patched",
+                app="other/1.0"),
     ]
+    # one file per run, so base and delta are one micro-batch each
     for i, rows in enumerate((base, delta)):
-        spark.createDataFrame(rows, schema=OPS_SCHEMA).write.parquet(
+        spark.createDataFrame(rows, schema=OPS_SCHEMA).coalesce(1).write.parquet(
             ops_dir + f"/f{i}.parquet"
         )
         start_posts_stream(
@@ -620,6 +625,14 @@ def test_streaming_reply_under_snapshot_parent_is_allowed(spark, tmp_path):
     assert streamed[("bob", "r1")] == (True, "reply one, edited")
     assert streamed[("carol", "r2")][0] and streamed[("dave", "r3")][0]
     assert not streamed[("erin", "r4")][0]
+    assert streamed[("mallory", "bad")][1] == "x, patched"
+    replayed = view(
+        build_posts(
+            spark.createDataFrame(delta, schema=OPS_SCHEMA),
+            snapshot=spark.read.parquet(state_dir),
+        )
+    )
+    assert replayed == {k: streamed[k] for k in replayed}
 
 
 def test_stream_exact_dedup_null_texts_pass_through(spark, tmp_path):

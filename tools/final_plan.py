@@ -22,25 +22,19 @@ def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import bench
     from union_indexer_node_spark import queries as q
     from union_indexer_node_spark.session import get_spark
 
-    spark = get_spark(app_name="final_plan")
     reg = q.registry()
-    # validate up front (ADVICE r15): an unknown name used to surface as
-    # a bare KeyError with no usable message
-    valid = set(reg) | set(bench.EXTRA_BENCH)
-    unknown = [n for n in names if n not in valid]
+    unknown = [n for n in names if n not in reg]
     if unknown:
         print(f"unknown entries: {unknown}", file=sys.stderr)
-        print(f"valid names: {sorted(valid)}", file=sys.stderr)
-        spark.stop()
+        print(f"valid names: {sorted(reg)}", file=sys.stderr)
         sys.exit(2)
+    spark = get_spark(app_name="final_plan")
     try:
         for n in names:
-            fn = bench.EXTRA_BENCH[n] if n in bench.EXTRA_BENCH else reg[n].fn
-            qe = fn(spark, sf_dir)._jdf.queryExecution()
+            qe = reg[n].fn(spark, sf_dir)._jdf.queryExecution()
             qe.toRdd().count()
             print(f"==== {n} (executed/final adaptive plan) ====")
             print(qe.executedPlan().toString())

@@ -169,17 +169,18 @@ def apply_patch(base: Column, patch: Column) -> Column:
     ).otherwise(patch)
 
 
-def folded_body(events: Column) -> Column:
+def folded_body(events: Column, start: Column | None = None) -> Column:
     """events: array<struct<block_height,tx_idx,op_idx,body>> (unsorted).
 
     array_sort orders by struct fields lexicographically (block_height,
-    tx_idx, op_idx). The fold starts from "": while the body so far is
-    empty (or NULL) the next body replaces it (NULL as ""); otherwise
-    the next body is applied to it as a patch. A NULL edit of a
-    non-empty body yields NULL."""
+    tx_idx, op_idx). The fold starts from ``start`` ("" when None, a
+    post's stored body when an incremental build resumes its fold):
+    while the body so far is empty (or NULL) the next body replaces it
+    (NULL as ""); otherwise the next body is applied to it as a patch.
+    A NULL edit of a non-empty body yields NULL."""
     return F.aggregate(
         F.array_sort(events),
-        F.lit(""),
+        F.lit("") if start is None else start,
         lambda acc, e: F.when(acc != "", apply_patch(acc, e["body"])).otherwise(
             F.coalesce(e["body"], F.lit(""))
         ),

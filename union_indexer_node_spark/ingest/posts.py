@@ -126,15 +126,18 @@ def build_posts(
     ops: DataFrame,
     *,
     max_reply_depth: int = 16,
-    known_allowed: DataFrame | None = None,
+    snapshot: DataFrame | None = None,
 ) -> DataFrame:
     """ops: FIXTURES.md raw_ops schema (comment + vote rows used).
 
-    ``known_allowed``: (author, permlink) keys already allowed by the
-    J9 closure outside ``ops`` — the snapshot an incremental batch folds
-    into. A comment here that replies to one of them is allowed like a
-    reply to a root here. None (the one-shot build) means ``ops`` is the
-    whole history."""
+    ``snapshot``: the published posts an incremental batch folds into;
+    None (the one-shot build) means ``ops`` is the whole history. The
+    body fold of a key already published resumes from its stored body,
+    over the events after its stored winning event: the fold is a left
+    fold, so this equals folding the whole history, and a replayed
+    batch does not apply its patches twice. A comment here that replies
+    to a post the snapshot allows is allowed like a reply to a root
+    here."""
     benef, auth = _intra_tx_enrichments(ops)
     comments = (
         ops.filter(F.col("op_type") == "comment")
@@ -144,6 +147,7 @@ def build_posts(
     )
 
     key = ["author", "permlink"]
+    batch_keys = ops.filter(F.col("op_type") == "comment").select(*key)
     w_last = Window.partitionBy(*key).orderBy(*[c.desc() for c in _order()])
 
     per_event = comments.select(
@@ -176,8 +180,29 @@ def build_posts(
             ).over(Window.partitionBy(*key)),
         )
         .filter(F.col("_rn") == 1)
-        .withColumn("body", folded_body(F.col("_events")))
-        .drop("_rn", "_events", "block_timestamp")
+    )
+    events, start = F.col("_events"), None
+    if snapshot is not None:
+        # The stored rows of the keys rebuilt here, read once: the J9
+        # closure below runs ``posts`` again for its roots and comments.
+        stored = (
+            snapshot.select(
+                *key,
+                F.col("body").alias("_stored_body"),
+                F.struct(*_order()).alias("_stored_at"),
+            )
+            .join(F.broadcast(batch_keys.distinct()), key, "left_semi")
+            .localCheckpoint()
+        )
+        latest = latest.join(F.broadcast(stored), key, "left")
+        stored_at = F.col("_stored_at")
+        events = F.filter(
+            events,
+            lambda e: stored_at.isNull() | (e.dropFields("body") > stored_at),
+        )
+        start = F.col("_stored_body")
+    latest = latest.withColumn("body", folded_body(events, start)).drop(
+        "_rn", "_events", "block_timestamp", "_stored_body", "_stored_at"
     )
 
     tags = F.coalesce(F.col("jm.tags"), F.array().cast("array<string>"))
@@ -243,7 +268,7 @@ def build_posts(
         .persist()
     )
     frontier = roots
-    if known_allowed is not None:
+    if snapshot is not None:
         # Allowed parents outside ``ops`` start the closure like roots:
         # only those the comments here reply to (broadcast semi-join),
         # and none of the keys ``ops`` itself rebuilds.
@@ -253,14 +278,12 @@ def build_posts(
                 F.col("parent_permlink").alias("permlink"),
             )
             .distinct()
-            .join(
-                ops.filter(F.col("op_type") == "comment").select(*key),
-                key,
-                "left_anti",
-            )
+            .join(batch_keys, key, "left_anti")
         )
-        seeds = known_allowed.select(*key).join(
-            F.broadcast(parents), key, "left_semi"
+        seeds = (
+            snapshot.filter(F.col("allowed_by_parent"))
+            .select(*key)
+            .join(F.broadcast(parents), key, "left_semi")
         )
         frontier = roots.unionByName(
             seeds.select(F.col("author").alias("pa"), F.col("permlink").alias("pp"))

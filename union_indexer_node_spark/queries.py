@@ -62,659 +62,9 @@ def q(name: str, oracle: str | None):
     return deco
 
 
-# The driver's correctness gate oracle-checks the FIRST 50 registry
-# entries (CORRECTNESS_r01/r02 key sets are exactly the first 50 in
-# insertion order). Every distinct §2 operator must therefore sit inside
-# that window. The entries below are near-duplicate variants whose
-# operator is already covered by an in-window sibling (noted inline);
-# they sort last. They remain fully oracle-tested locally by
-# tests/test_queries_oracle.py, which parametrizes over ALL entries.
-#
-# ROTATION CADENCE (the staleness-bounding rule, made explicit in r8):
-# with 202 entries (ADVICE r9: this count is load-bearing — keep it in
-# lockstep with the @q registrations, including queries_r11's 18,
-# queries_r12's 13, queries_r13's 24 and queries_r14's 2) and a
-# 50-slot window, the
-# hygiene bound is "no entry's last driver-green recedes past ~4
-# rounds", sustained by each round (a) rotating IN the oldest tranche
-# (every entry whose last driver-green is ≥3 rounds old) plus anything
-# never driver-seen, and (b) rotating OUT only entries that are
-# multiply driver-green with an in-window family sibling noted inline.
-# New entries are born in-window and count against the same 50 slots.
-# Round 9 executed the full plan written in r8 (30 swaps draining two
-# tranches). Round 10 executed the full plan written in r9: the 3
-# born-in-tail r9 passage entries + the entire named 14-entry r5-era
-# tranche entered, plus 5 entries born in-window
-# (dedup_remove_duplicate_spans, text_bpe_train_merges,
-# text_quality_classifier, training_bloom_decontaminate,
-# training_cdc_chunks) — 22 swaps, rotate-outs noted at the list's
-# end; the last two slots are funded by dedup_shared_passages and
-# training_hash_split (both multiply-green, see the r10 rotate-out
-# section) rather than by evicting once-green r9 entries
-# (setop_intersect_except / lineitem_unpivot_measures stay in-window).
-# The r11 tranche is pre-named at the top of the list below.
-_DEPRIORITIZED = [
-    # ------------------------------------------------------------------
-    # ROUND 12 ROTATION — EXECUTED. The plan written in r11 (19 r7-era
-    # stale entries + all 14 r11 born-in-tail entries, 33 mandatory
-    # swaps) is IN THE WINDOW this round: all 33 names were removed
-    # from this list, plus a_approx_distinct_users (upgraded this
-    # round to the oracle-hashed global-KMV estimator — never
-    # driver-green WITH a hash, so scheduled like a never-seen entry)
-    # and pipeline_diff_bm25_chain (born in-window r12: the
-    # corpus_diff -> bm25_index_merge end-to-end chain, VERDICT r11
-    # item 7) — 35 rotate-ins total. The 14 entries that were
-    # single-green (r11-only) all STAY in-window to become
-    # multiply-green: training_negative_sample, a_approx_distinct_kmv,
-    # layout_zorder_key, training_dsir_resample,
-    # dedup_keep_best_quality, training_temperature_resample,
-    # text_bpe_encode, search_bm25_topk, search_rrf_fusion,
-    # sim_mmr_rerank, multimodal_media_probe, sim_ivf_pq_adc,
-    # text_unigram_lm_train, dedup_remove_duplicate_spans_maximal.
-    # ingest_follows_families (green r8-r11) also stays: it is the
-    # only ingest-dispatch anchor and the follows code path changed
-    # this round (empty-bucket tombstone compaction). The 35 slots are
-    # funded by the rotate-outs in the "rotated out in ROUND 12"
-    # section at the end — every one multiply driver-green (r11 plus
-    # at least one earlier round) with a family sibling noted inline.
-    # ------------------------------------------------------------------
-    # BORN IN TAIL (r12): entries added after the r12 window was
-    # finalized at 50. Enter with the r13 tranche. Locally
-    # oracle-tested like every tail entry.
-    # ------------------------------------------------------------------
-    # ------------------------------------------------------------------
-    # BORN IN TAIL (r13): ALL 24 ENTERED THE WINDOW in r14 (VERDICT
-    # r13 item 1's done-criterion: the never-driver-checked count
-    # drops 24 -> 0). Names in the ROUND 14 ROTATION note below.
-    # ------------------------------------------------------------------
-    # BORN IN TAIL (r14): four births, inside VERDICT r13 item 2's
-    # cap — one new eval (item 6), the two TPC-H faithful promotions
-    # (item 4, each RETIRING its *_shape predecessor — net registry
-    # growth from those two is zero), and the incremental triangle
-    # fold (item 5's maintenance direction, promoted from the
-    # canonical-edge soak to a first-class operator). All enter with
-    # the r15 tranche, obligation (a).
-    # ------------------------------------------------------------------
-    # ------------------------------------------------------------------
-    # ALL 12 r12 tail-borns ENTERED THE WINDOW in r13 (VERDICT r12
-    # item 3's done-criterion: every never-driver-checked entry gets a
-    # green CORRECTNESS_r13 row): pipeline_diff_minhash_chain,
-    # sketch_cm_heavy_hitters, sketch_sample_quantiles,
-    # curation_remove_frequent_lines, sim_kmeans_incremental,
-    # ingest_follows_audit, and the six TPC-H completions (q2/q9
-    # promoted to faithful forms per item 8; see the r13 rotation
-    # note below).
-    # ------------------------------------------------------------------
-    # ROUND 13 ROTATION — EXECUTED. Checked against the actual
-    # driver-green history (CORRECTNESS_r01..r12): the r12 window held
-    # 2 zero-green entries (the multimodal hash-fails), 12 single-green
-    # entries (BORN in-window in r12), and 36 multiply-green (the r12
-    # plan's "16 single-green stays" were in fact green r11 AND r12).
-    # Obligations: the 2 multimodal entries STAY (VERDICT r12 item 1 —
-    # the oracle BIGINT-cast fix needs a driver-green row, and
-    # zero-green entries can't rotate out anyway); ALL 12
-    # never-driver-checked tail-borns enter (item 3's done-criterion);
-    # all 30 r8-era backlog entries enter (staleness bound hit at r13
-    # as scheduled). 2 + 12 + 30 = 44, leaving 6 keep slots, chosen for
-    # maximum re-confirmation value: search_bm25_topk and
-    # sim_mmr_rerank (their operators change in r13 items 6/7),
-    # pipeline_diff_bm25_chain and sim_ivfpq_search (the two heaviest
-    # composed chains), a_approx_distinct_users (the re-oracled KMV the
-    # judge tracked), search_bm25_index_incremental (the streaming
-    # index whose BM25 stats path item 7 touches). The other 42
-    # r12-window entries rotate out ("Rotated out in ROUND 13" section
-    # at the end); 32 are multiply-green per the cadence rule; 10 are
-    # r12-born singles — a DOCUMENTED one-round exception forced by the
-    # arithmetic above (44 obligatory slots leave room to keep only 2
-    # of the 12 r12-borns). Their last driver-green is r12, so the
-    # staleness bound reaches them at r17; they are pre-named as the
-    # FRONT of the r14 tranche (with anything born in r13) so each
-    # becomes multiply-green well inside the bound, funded by the
-    # then-multiply-green r13 re-entries.
-    # ------------------------------------------------------------------
-    # ROUND 14 ROTATION — EXECUTED exactly as pre-named (checked
-    # against CORRECTNESS_r13.json: 50/50 green, zero err, so every
-    # planned rotate-out is driver-green r13 and eligible).
-    # The window is now: 10 displaced r12-born singles + 24 r13-borns
-    # (never driver-checked until now) + 16 r9-era staleness
-    # re-entries = 50. The 4 youngest r9-era entries stay deferred to
-    # r15 as planned (top of the round-10 section below). All 50
-    # r13-window entries rotated out ("Rotated out in ROUND 14"
-    # section at the end): 36 multiply-green, 14 r13-singles (the 2
-    # multimodal re-proves + the 12 r12-tail-borns whose first green
-    # was r13) — the same documented one-round displacement exception
-    # as r13, pre-named as the FRONT of the r15 tranche.
-    # ------------------------------------------------------------------
-    # ROUND 15 ROTATION — EXECUTED exactly as pre-named (checked
-    # against CORRECTNESS_r14.json: 50/50 green, zero err, so every
-    # planned rotate-out is driver-green r14 and eligible). The
-    # window is now (a)+(b)+(c)+(d) = 4+13+4+28 = 49 of 50, one slot
-    # deliberately spare (no r15 births; see the r16/r17 ledger
-    # below). All 50 r14-window entries rotated out ("Rotated out in
-    # ROUND 15" section at the end): 26 multiply-green, 24
-    # r14-singles (the r13-borns whose first green was r14) — the
-    # same documented displacement exception as r13/r14, pre-named as
-    # the FRONT of the r18 tranche (their staleness bound; r16/r17
-    # are consumed by older tranches, arithmetic below).
-    # Obligations as pre-named in r14, priority order:
-    # (a) the r14 tail-borns (never driver-checked). ADVICE r14
-    #     correction: the cap rule is births <= the next window's
-    #     free slots (r15 had 5 free after (b)+(c)+(d), so r14's FOUR
-    #     births fit; the earlier "at most 3" phrasing here misstated
-    #     the rule): fuzzy_blocking_recall_eval, tpch_q12_shipmode,
-    #     tpch_q21_waiting_supplier, graph_triangle_incremental;
-    # (b) the 13 displaced r13-singles (front of the tranche:
-    #     multimodal_dhash_near_dup, multimodal_audio_fingerprint,
-    #     pipeline_diff_minhash_chain, sketch_cm_heavy_hitters,
-    #     sketch_sample_quantiles, curation_remove_frequent_lines,
-    #     sim_kmeans_incremental, ingest_follows_audit,
-    #     tpch_q2_min_cost_supplier, tpch_q9_profit,
-    #     tpch_q11_important_stock, tpch_q16_supplier_cnt,
-    #     tpch_q20_part_promotion — the 14th r13-single,
-    #     tpch_q12_shipmode_shape, was RETIRED by its r14 faithful
-    #     promotion; its successor tpch_q12_shipmode enters under (a));
-    # (c) the 4 deferred r9-era entries (w3_first_event_per_user,
-    #     o6_related_feed_sample, x21_search_feed,
-    #     x21_inverted_index_search — at bound+1, must not slip again);
-    # (d) fill the remaining slots with the OLDEST staleness tranche:
-    #     the r10-era "Rotated out in ROUND 11" section (28 entries
-    #     after tpch_q21_waiting_supplier_shape's r14 retirement —
-    #     its faithful successor enters under (a); last green r10 —
-    #     5 rounds stale at r15, older than the r11-era tranche the
-    #     r12 section's note nominally dated r15).
-    # Capacity arithmetic (honest): 202 entries / 50 slots / ~4-round
-    # bound is SATURATED, and the 35-entry r11-era tranche slides to
-    # r16 (6 rounds stale by then). The only lever that restores the
-    # bound is what VERDICT r13 item 2 prescribes: near-zero births
-    # until every tranche is multiply-green. r14 held births to FOUR
-    # (fuzzy_blocking_recall_eval per VERDICT item 6, the q12/q21
-    # faithful promotions per item 4 — each RETIRING its shape — and
-    # graph_triangle_incremental per item 5's maintenance direction;
-    # net registry growth +2). Updated r15 arithmetic: (b) = 13
-    # singles (q12's shape slot passes to its faithful successor in
-    # (a)), (c) = 4, (d) = 28 (q21's shape retired from the r10-era
-    # tranche), (a) = 4 — total 49 of 50, one slot spare for an r15
-    # birth or an extra staleness pull-forward. r15 chose to LEAVE the
-    # slot spare (zero births): every rotate-in this round is an
-    # obligation, and the r16/r17 ledger below is already saturated.
-    # ------------------------------------------------------------------
-    # ROUND 16/17 ROTATION — PRE-NAMED (VERDICT r14 item 8: the
-    # r10/r11-born pile hits its bounds simultaneously around
-    # r16-r17; write the tranches down BEFORE r15 closes). Post-r15
-    # last-green ledger, computed from CORRECTNESS_r01..r14 plus the
-    # expected r15 window: r15:49, r14:50, r13:36, r12:32, r11:35.
-    # ROUND 16 (50 slots, zero free — NO r15/r16 births can enter
-    # before r18 without displacing an obligation):
-    #   - ALL 35 of the r11-era tranche ("Rotated out in ROUND 12"
-    #     section; last green r11 — 5 rounds stale at r16, the oldest
-    #     on the books): w2_lww_latest_event, j3_num_comments_per_post,
-    #     x18_hex_to_long, dedup_lsh_candidates,
-    #     o5_children_topk_per_parent, f10_point_lookup,
-    #     a3_distinct_authors, a7_total_active_creators,
-    #     temporal_range_join, stream_passage_counts_incremental,
-    #     training_decontaminate, training_bloom_decontaminate,
-    #     training_cdc_chunks, sample_weighted_bernoulli,
-    #     tpch_q18_large_volume, tpch_q10_returned_items,
-    #     training_hash_split, dedup_shared_passages,
-    #     dedup_remove_repeated_passages, dedup_remove_duplicate_spans,
-    #     dedup_cross_source_overlap, text_language_consistency,
-    #     text_bpe_pair_counts, text_bpe_train_merges,
-    #     text_quality_classifier, text_tfidf_topk,
-    #     pipeline_adaptive_quality_gate, training_budget_select,
-    #     temporal_funnel_stages, search_substring_trigram,
-    #     temporal_cohort_retention, events_pivot_type_counts,
-    #     temporal_moving_window_agg, pipeline_column_profile,
-    #     dedup_lsh_incremental;
-    #   - the FIRST 15 (section order) of the r12-era tranche
-    #     ("Rotated out in ROUND 13", last green r12 — at bound r16):
-    #     f4_regex_filter, a2_distinct_authors_of_app,
-    #     a5_score_zeroing, x1_json_props_extract, x2_detect_post_type,
-    #     j2_parent_post_join, j7_follows_overview,
-    #     training_negative_sample, a_approx_distinct_kmv,
-    #     skew_salted_comment_counts, pipeline_corpus_curation,
-    #     dedup_embedding_neardup, text_language_id_ngram,
-    #     text_vocab_topk_per_source, sample_stratified.
-    # ROUND 17 (50 slots, zero free):
-    #   - the REMAINING 17 of the r12-era tranche (one round past
-    #     bound — the same documented one-round slack as the r9-era
-    #     deferrals, forced by the r11-era pile above):
-    #     x21_index_incremental_update, stream_dedup_batch_equivalence,
-    #     layout_zorder_key, training_dsir_resample,
-    #     dedup_keep_best_quality, training_pack_next_fit,
-    #     training_epoch_interleave, ann_recall_eval,
-    #     stream_stream_join_attribution, training_temperature_resample,
-    #     ingest_follows_families, text_bpe_encode, search_rrf_fusion,
-    #     multimodal_media_probe, sim_ivf_pq_adc, text_unigram_lm_train,
-    #     dedup_remove_duplicate_spans_maximal;
-    #   - 33 of the 36 r13-era tranche ("Rotated out in ROUND 14"
-    #     multiply-green section, last green r13 — at bound r17): all
-    #     EXCEPT the three thickest (search_bm25_topk green r10-r13,
-    #     a1_trending_tags green r2/r3/r7/r12/r13, w4_feed_pagination
-    #     green r2/r3/r7/r12/r13 — each >=5 driver greens, deferred
-    #     one round to r18, the same documented slack).
-    # ROUND 18 (obligations 27, ~23 free — the first relief round):
-    #   the 3 r13-era deferrals above + the 24 r14-singles (front of
-    #   the tranche, at their r18 bound). Births deferred from
-    #   r15-r17 can land here.
-    # ------------------------------------------------------------------
-    # Original r14 pre-naming (kept for the audit trail). Obligations:
-    # (a) the 10 displaced r12-born SINGLES (driver-green r12 only;
-    #     pre-named in r13 as the FRONT of this tranche — the exact
-    #     names sit at the bottom of the "Rotated out in ROUND 13"
-    #     section: text_unigram_encode, text_unicode_scrub,
-    #     text_gopher_quality_gate, pipeline_ccnet_buckets,
-    #     training_contamination_report, graph_pagerank_quantized,
-    #     pipeline_corpus_diff, curation_dedup_lines_within_doc,
-    #     stream_bm25_index_incremental, feeds_decayed_trending) plus
-    #     the 24 never-driver-checked r13-borns
-    #     (sim_mmr_rerank_batch, sketch_kmv_source_overlap,
-    #     graph_cc_incremental, curation_keyword_tag,
-    #     curation_ngram_novelty, layout_hilbert_key,
-    #     dedup_lsh_recall_eval, training_rendezvous_shard,
-    #     temporal_gap_fill, graph_triangle_count,
-    #     sketch_hll_distinct, curation_url_dedup,
-    #     text_token_entropy, ann_multiprobe_recall,
-    #     training_cluster_split, temporal_ohlc_rollup,
-    #     dedup_containment_probe, sample_weighted_reservoir,
-    #     quality_referential_audit, dedup_prefix_filter_join,
-    #     dedup_fuzzy_edit_match, sketch_hll_rollup,
-    #     pipeline_source_scorecard, temporal_asof_tolerance);
-    # (b) the "rotated out in round 10" tranche directly below — last
-    #     driver-green r9, the oldest on the books — re-enters under
-    #     the staleness rule (20 entries).
-    # 34 + 20 = 54 ins against 50 slots — the continuation session's
-    # tail-borns OVERFLOWED the window by four: defer the four
-    # YOUNGEST of the r9-era staleness tranche
-    # (w3_first_event_per_user, o6_related_feed_sample,
-    # x21_search_feed, x21_inverted_index_search — all green
-    # r1-r3/r4+r8/r9; they re-enter r15 at bound+1, one-round
-    # documented slack, the r13 displaced-singles precedent) rather
-    # than skipping a never-driver-checked entry.
-    # Every r13-window entry rotates out (all then multiply-green
-    # except the displaced singles rule below); pre-name those singles
-    # as the front of the r15 tranche. If r14 births in-window
-    # entries, extend the same deferral to the next-youngest of the
-    # r9 tranche.
-    # ------------------------------------------------------------------
-    # Rotated out in round 10. r14 re-entered 16 of the 20 under the
-    # staleness rule; the remaining 4 (the youngest of the tranche,
-    # the DOCUMENTED r14 deferrals: w3_first_event_per_user,
-    # o6_related_feed_sample, x21_search_feed,
-    # x21_inverted_index_search) RE-ENTERED the window in r15 as
-    # obligation (c) — the section is now fully drained.
-    # ------------------------------------------------------------------
-    # ------------------------------------------------------------------
-    # Rotated out in ROUND 11 under the cadence rule: originally 29
-    # entries funding the 25 rotate-ins (13 r6-stale + 10 r10
-    # born-in-tail + 2 rejoins) and the 4 entries born in-window that
-    # round. ALL 28 survivors (q21's shape was retired by its r14
-    # faithful promotion, note below) RE-ENTERED the window in r15 as
-    # obligation (d) — the section is now fully drained.
-    # ------------------------------------------------------------------
-    # tpch_q21_waiting_supplier_shape (green r9/r10) was PROMOTED in
-    # r14 to the faithful tpch_q21_waiting_supplier over the derived
-    # lineitem_ext relation (VERDICT r13 item 4) — the faithful entry
-    # is BORN IN TAIL (r14) above; the shape is retired, its greens
-    # recorded here for the audit trail.
-    # ------------------------------------------------------------------
-    # Rotated out in ROUND 12 under the cadence rule: these 35 fund
-    # the 35 rotate-ins (19 r7-era + 14 r11 born-in-tail +
-    # a_approx_distinct_users + pipeline_diff_bm25_chain). Every one
-    # is multiply driver-green (r11 plus at least one earlier round)
-    # with its operator family still in-window, noted inline. Last
-    # driver-green r11 for all -> staleness bound reached r15.
-    # ------------------------------------------------------------------
-    "w2_lww_latest_event",  # green r2-r6+r11; LWW/order-insensitive
-    #    family via stream_dedup_batch_equivalence (in-window r12);
-    #    permutation-invariance property tests stay local
-    "j3_num_comments_per_post",  # green r2-r6+r11; agg-then-join count
-    #    essence via skew_salted_comment_counts (in-window r12, the
-    #    identical count with the salted two-phase arm)
-    "x18_hex_to_long",  # green r1/r2/r6/r11; X-parse family via
-    #    x1_json_props_extract + x2_detect_post_type (in-window r12)
-    "dedup_lsh_candidates",  # green r1-r6+r11; LSH band family via
-    #    pipeline_diff_minhash_chain... see BORN IN TAIL; in-window
-    #    reps: dedup_embedding_neardup + multimodal_dhash_near_dup
-    "o5_children_topk_per_parent",  # green r2-r6+r11; per-group top-k
-    #    via text_vocab_topk_per_source (in-window r12)
-    "f10_point_lookup",  # green r2/r6/r11; F-family equality/pushdown
-    #    via f4_regex_filter + the wherefield grid units
-    "a3_distinct_authors",  # green r2/r6/r11; distinct family via
-    #    a2_distinct_authors_of_app (in-window r12)
-    "a7_total_active_creators",  # green r2/r6/r11; scalar-agg family
-    #    via a5_score_zeroing + a_approx_distinct_users' exact
-    #    companion (both in-window r12)
-    "temporal_range_join",  # green r4-r6+r11; interval-join family via
-    #    stream_stream_join_attribution (in-window r12); the pinned
-    #    long-arm plan test stays
-    "stream_passage_counts_incremental",  # green r10/r11; streaming
-    #    foreachBatch fold family via stream_bm25_index_incremental +
-    #    stream_dedup_batch_equivalence (in-window r12)
-    "training_decontaminate",  # green r5/r6/r11; decontamination via
-    #    training_contamination_report (in-window r12, the per-
-    #    benchmark superset report)
-    "training_bloom_decontaminate",  # green r10/r11; same family; the
-    #    joinless-probe plan pin stays
-    "training_cdc_chunks",  # green r10/r11; chunking family via
-    #    training_pack_next_fit (in-window r12); CDC boundary property
-    #    tests stay local
-    "sample_weighted_bernoulli",  # green r5/r6/r11; sampling family
-    #    via sample_stratified (in-window r12)
-    "tpch_q18_large_volume",  # green r5/r6/r11; the having-semi-join +
-    #    multi-join relational shape via pipeline_diff_bm25_chain's
-    #    join-agg stack + skew_salted_comment_counts (in-window r12);
-    #    whole TPC-H family keeps the local oracle battery
-    "tpch_q10_returned_items",  # green r5/r6/r11; join-agg-topk shape
-    #    via text_vocab_topk_per_source (in-window r12); same local
-    #    TPC-H battery
-    "training_hash_split",  # green r7-r9+r11; md5-rank split family
-    #    via sample_stratified (in-window r12)
-    "dedup_shared_passages",  # green r8/r9/r11; passage family via
-    #    dedup_remove_duplicate_spans_maximal (in-window, the
-    #    strictly-wider verified arm)
-    "dedup_remove_repeated_passages",  # green r10/r11; same family rep
-    "dedup_remove_duplicate_spans",  # green r10/r11; same family; the
-    #    affected-docs-only plan pin stays (test_plans.py)
-    "dedup_cross_source_overlap",  # green r10/r11; overlap family via
-    #    training_contamination_report (in-window r12, the gram-join
-    #    generalization)
-    "text_language_consistency",  # green r9-r11; langid family via
-    #    text_language_id_ngram (in-window r12)
-    "text_bpe_pair_counts",  # green r9-r11; BPE family via
-    #    text_bpe_encode (in-window stay) + text_unigram_encode
-    #    (in-window r12)
-    "text_bpe_train_merges",  # green r10/r11; trainer-loop family via
-    #    text_unigram_lm_train (in-window stay)
-    "text_quality_classifier",  # green r10/r11; quality family via
-    #    text_gopher_quality_gate + pipeline_ccnet_buckets
-    #    (in-window r12)
-    "text_tfidf_topk",  # green r9-r11; tf-idf/top-k family via
-    #    text_vocab_topk_per_source + search_bm25_topk (in-window)
-    "pipeline_adaptive_quality_gate",  # green r9-r11; quantile-gate
-    #    family via pipeline_ccnet_buckets (in-window r12)
-    "training_budget_select",  # green r9-r11; budget family via
-    #    pipeline_corpus_curation (in-window r12, which composes it)
-    "temporal_funnel_stages",  # green r9-r11; temporal family via
-    #    stream_stream_join_attribution (in-window r12)
-    "search_substring_trigram",  # green r9-r11; search family via
-    #    search_bm25_index_incremental + x21_index_incremental_update
-    #    (in-window r12)
-    "temporal_cohort_retention",  # green r9-r11; temporal family as
-    #    above
-    "events_pivot_type_counts",  # green r9-r11; pivot family keeps
-    #    unit tests; groupBy shape ubiquitous in-window
-    "temporal_moving_window_agg",  # green r9-r11; window-frame family
-    #    via feeds_decayed_trending (in-window r12)
-    "pipeline_column_profile",  # green r9-r11; profile family via
-    #    pipeline_ccnet_buckets' exact quantiles (in-window r12)
-    "dedup_lsh_incremental",  # green r9-r11; incremental-maintenance
-    #    family via pipeline_diff_bm25_chain +
-    #    search_bm25_index_incremental (in-window r12)
-    # ------------------------------------------------------------------
-    # Rotated out in ROUND 13 (see the rotation note at the top of this
-    # list for the funding arithmetic). First the 32 multiply-green:
-    # ------------------------------------------------------------------
-    "f4_regex_filter",  # green r2/r3/r7/r12; F-family regexp rep via
-    #    a9_mention_notifications (in-window r13) + wherefield units
-    "a2_distinct_authors_of_app",  # green r2/r3/r7/r12; distinct
-    #    family via a1_trending_tags (in-window r13)
-    "a5_score_zeroing",  # green r3-r7/r12; A-family conditional-agg
-    #    via a6_sign_counts_higher_order (in-window r13)
-    "x1_json_props_extract",  # green r2/r3/r7/r12; JSON family via
-    #    j11_chain_state_enrichment's props join (in-window r13)
-    "x2_detect_post_type",  # green r2/r3/r7/r12; X-scalar family via
-    #    text_fingerprint + social_feed_by_app (in-window r13)
-    "j2_parent_post_join",  # green r2/r3/r7/r12; self-join family via
-    #    j9_reply_closure + j4_follower_feed (in-window r13)
-    "j7_follows_overview",  # green r2/r3/r7/r12; follows family via
-    #    j4_follower_feed + ingest_follows_audit (in-window r13)
-    "training_negative_sample",  # green r11/r12; sampling family via
-    #    o6-style hash-order reps; no-cross-join plan pin stays
-    "a_approx_distinct_kmv",  # green r11/r12; KMV family via
-    #    a_approx_distinct_users (KEPT in-window r13)
-    "skew_salted_comment_counts",  # green r2-r7/r12; salted two-phase
-    #    agg keeps its plan tests; count family ubiquitous in-window
-    "pipeline_corpus_curation",  # green r3-r7/r12; composes operators
-    #    whose families re-enter r13 (quality gates, budget select)
-    "dedup_embedding_neardup",  # green r1/r3-r7/r12; banded near-dup
-    #    family via dedup_minhash_signature + dedup_ngram_jaccard
-    #    (in-window r13) + the two multimodal entries (stay)
-    "text_language_id_ngram",  # green r3-r7/r12; langid family via
-    #    text_language_id (in-window r13)
-    "text_vocab_topk_per_source",  # green r4-r7/r12; per-group top-k
-    #    via sim_ivf_topk_label + a1_trending_tags (in-window r13)
-    "sample_stratified",  # green r4-r7/r12; sampling family via
-    #    pipeline_training_prep's split (in-window r13)
-    "x21_index_incremental_update",  # green r4-r7/r12; incremental
-    #    index family via pipeline_diff_minhash_chain +
-    #    pipeline_diff_bm25_chain (both in-window r13)
-    "stream_dedup_batch_equivalence",  # green r4-r7/r12; streaming
-    #    equivalence family via stream_windowed_counts_batch_equivalence
-    #    (in-window r13)
-    "layout_zorder_key",  # green r11/r12; layout family keeps its
-    #    interleave-bits unit tests; no in-window dependency
-    "training_dsir_resample",  # green r11/r12; importance-resample
-    #    family via pipeline_training_prep (in-window r13)
-    "dedup_keep_best_quality",  # green r11/r12; canonical-keep family
-    #    via dedup_cc_clusters resolution (in-window r13)
-    "training_pack_next_fit",  # green r5-r7/r12; packing family keeps
-    #    unit tests; chunk family via pipeline_training_prep
-    "training_epoch_interleave",  # green r5-r7/r12; interleave family
-    #    keeps its determinism units
-    "ann_recall_eval",  # green r5-r7/r12; ANN eval family via
-    #    sim_ivfpq_search (KEPT) + sim_ivf_topk_label (in-window r13)
-    "stream_stream_join_attribution",  # green r5-r7/r12; interval/
-    #    temporal family via temporal_asof_join (in-window r13)
-    "training_temperature_resample",  # green r11/r12; resample family
-    #    via pipeline_training_prep (in-window r13)
-    "ingest_follows_families",  # green r8-r12 (five consecutive);
-    #    ingest dispatch family via ingest_follows_audit (in-window
-    #    r13, the strictly wider dead-letter view of the same ops)
-    "text_bpe_encode",  # green r11/r12; BPE family via text_fingerprint
-    #    (in-window r13); join-not-reencode plan pin stays
-    "search_rrf_fusion",  # green r11/r12; fusion family via
-    #    search_bm25_topk (KEPT in-window r13)
-    "multimodal_media_probe",  # green r11/r12; multimodal family via
-    #    the two Hamming-LSH entries (STAY in-window r13)
-    "sim_ivf_pq_adc",  # green r11/r12; PQ family via sim_ivfpq_search
-    #    (KEPT in-window r13, the composed superset)
-    "text_unigram_lm_train",  # green r11/r12; trainer-loop family via
-    #    sim_kmeans_incremental's suffstats loop (in-window r13)
-    "dedup_remove_duplicate_spans_maximal",  # green r11/r12; passage
-    #    family plan pins stay; dedup family broadly in-window r13
-    # ------------------------------------------------------------------
-    # ...then the 10 r12-born singles (the documented one-round
-    # exception; pre-named FRONT of the r14 tranche, staleness bound
-    # r17):
-    # ------------------------------------------------------------------
-    # ------------------------------------------------------------------
-    # Rotated out in ROUND 14 (the full r13 window, all driver-green in
-    # CORRECTNESS_r13's 50/50 record). First the 36 multiply-green
-    # (r13 plus at least one earlier round), families in-window:
-    # ------------------------------------------------------------------
-    "social_feed_by_app",  # green r12/r13 (+earlier as flagship);
-    #    F/O flagship shape via f1_tag_membership (in-window r14)
-    "f2_f3_f5_filter_combo",  # green r7/r12/r13; F-family combo via
-    #    f1_tag_membership + the wherefield grid units
-    "a1_trending_tags",  # green r2/r3/r7/r12/r13; A-family via
-    #    tpch_q1_pricing_summary aggregates (in-window r14)
-    "w1_leaderboard_rank",  # green r7/r12/r13; rank-window family via
-    #    sample_weighted_reservoir's rank window (in-window r14)
-    "w4_feed_pagination",  # green r2/r3/r7/r12/r13; keyset-cursor
-    #    family keeps its full-walk gap/dup local tests
-    "j4_follower_feed",  # green r7/r12/r13; semi-join family via
-    #    j4_follower_feed_did (in-window r14, the DID arm)
-    "j9_reply_closure",  # green r7/r12/r13; iterative fixpoint family
-    #    via graph_cc_incremental (in-window r14)
-    "a9_mention_notifications",  # green r7/r12/r13; regex/explode
-    #    family via text_quality_features (in-window r14)
-    "dedup_minhash_signature",  # green r7/r12/r13; MinHash family via
-    #    dedup_lsh_recall_eval + dedup_simhash (in-window r14)
-    "dedup_ngram_jaccard",  # green r2-r4/r7/r12/r13; verify-join
-    #    family via dedup_prefix_filter_join + dedup_containment_probe
-    #    (in-window r14)
-    "sim_ivf_topk_label",  # green r7/r12/r13; IVF family via
-    #    ann_multiprobe_recall + sim_cosine_topk (in-window r14)
-    "sim_pairwise_cosine",  # green r7/r12/r13; cosine family via
-    #    sim_cosine_topk (in-window r14)
-    "text_language_id",  # green r7/r12/r13; langid family via
-    #    text_quality_features (in-window r14 sibling signals)
-    "text_fingerprint",  # green r7/r12/r13; rolling-hash family via
-    #    dedup_fuzzy_edit_match blocks (in-window r14)
-    "o2_a8_trending_feed_payout",  # green r7/r12/r13; max-anchored
-    #    window family via temporal_ohlc_rollup (in-window r14)
-    "a6_sign_counts_higher_order",  # green r7/r12/r13; HOF-agg family
-    #    via text_token_entropy's fold (in-window r14)
-    "j11_chain_state_enrichment",  # green r7/r12/r13; snapshot-join
-    #    family via tpch joins (in-window r14)
-    "setop_union_sources",  # green r7/r12/r13; set-op family keeps
-    #    unit coverage; union shape ubiquitous in-window
-    "a_approx_distinct_users",  # green r12(hash)/r13; KMV family via
-    #    sketch_kmv_source_overlap (in-window r14)
-    "temporal_asof_join",  # green r12/r13; as-of family via
-    #    temporal_asof_tolerance (in-window r14, the superset arm)
-    "dedup_cc_clusters",  # green r7/r12/r13; CC family via
-    #    graph_cc_incremental (in-window r14)
-    "stream_windowed_counts_batch_equivalence",  # green r12/r13;
-    #    streaming-equivalence family via the r14 cc-incremental soak
-    #    (test_round14) + stream units
-    "pipeline_training_prep",  # green r12/r13; composition family via
-    #    pipeline_source_scorecard (in-window r14)
-    "tpch_q6_forecast_revenue",  # green r5/r6/r12/r13; TPC-H scalar
-    #    family via tpch_q1/q4 (in-window r14)
-    "tpch_q7_volume_shipping",  # green r5/r6/r12/r13; same family
-    "tpch_q8_market_share",  # green r5/r6/r12/r13; same family
-    "tpch_q14_promo_effect",  # green r5/r6/r12/r13; same family
-    "tpch_q15_top_supplier",  # green r5/r6/r12/r13; same family
-    "tpch_q19_disjunctive_revenue",  # green r5/r6/r12/r13; same family
-    "tpch_q22_global_sales_opportunity",  # green r6/r12/r13; same
-    #    family
-    "w5_scd2_history",  # green r6/r12/r13; SCD2/window family via
-    #    temporal_time_rollup (in-window r14)
-    "search_bm25_topk",  # green r10-r13 (four consecutive); BM25
-    #    family keeps prebuilt bench arm + local oracle battery
-    "sim_mmr_rerank",  # green r11-r13; MMR family via
-    #    sim_mmr_rerank_batch (in-window r14, the batch twin)
-    "search_bm25_index_incremental",  # green r12/r13; incremental
-    #    index family keeps foreachBatch soaks local
-    "sim_ivfpq_search",  # green r12/r13; PQ family via
-    #    ann_multiprobe_recall + prebuilt bench arm
-    "pipeline_diff_bm25_chain",  # green r12/r13; diff-chain family
-    #    keeps local oracle; incremental family via graph_cc_incremental
-    # ------------------------------------------------------------------
-    # ...the 14 r13-singles entered the r15 window as planned (the 13
-    # surviving names + the faithful q12 successor under (a)); their
-    # displacement exception is CLOSED once CORRECTNESS_r15 is green.
-    # ------------------------------------------------------------------
-    # tpch_q12_shipmode_shape (green r13) was PROMOTED in r14 to the
-    # faithful tpch_q12_shipmode over the derived lineitem_ext
-    # relation (VERDICT r13 item 4) — the faithful entry entered the
-    # r15 window under (a); the shape is retired, its green recorded
-    # here.
-    # ------------------------------------------------------------------
-    # Rotated out in ROUND 15 (the full r14 window, all driver-green
-    # in CORRECTNESS_r14's 50/50 record). First the 26 multiply-green
-    # (r14 plus at least one earlier round), families in-window or
-    # noted:
-    # ------------------------------------------------------------------
-    "f1_tag_membership",  # green r2-r4/r9/r14; F-family membership
-    #    via f9_missing_field + the wherefield grid units (in-window
-    #    r15)
-    "j4_follower_feed_did",  # green r2-r3/r8-r9/r14; follows family
-    #    via ingest_follows_audit (in-window r15)
-    "j1_children_join",  # green r2-r4/r9/r14; self-join family via
-    #    o6_related_feed_sample + the TPC-H joins (in-window r15)
-    "dedup_exact",  # green r1-r4/r9/r14; dedup family via
-    #    dedup_apply_keep_canonical (in-window r15)
-    "dedup_simhash",  # green r1-r4/r9/r14; Hamming-band family via
-    #    ann_lsh_signatures + dedup_semantic_flags (in-window r15)
-    "sim_cosine_topk",  # green r1-r4/r9/r14; cosine family via
-    #    sim_label_centroids + sim_quantize_int8 (in-window r15)
-    "text_quality_features",  # green r1-r4/r9/r14; text-stats family
-    #    via text_repetition_stats + text_lm_quality_score (in-window
-    #    r15)
-    "tpch_q1_pricing_summary",  # green r1-r4/r9/r14; TPC-H agg family
-    #    via tpch_q3/q5/q13/q17 + faithful q12/q21 (in-window r15)
-    "tpch_q4_order_priority",  # green r4/r9/r14; same family (the
-    #    faithful q21 in-window carries the same exists-probe shape)
-    "text_bpe_token_count",  # green r3-r4/r9/r14; BPE family keeps
-    #    its local oracle battery; token-count shape via
-    #    text_length_percentiles (in-window r15)
-    "ann_lsh_topk",  # green r3-r4/r9/r14; LSH family via
-    #    ann_lsh_signatures (in-window r15)
-    "temporal_time_rollup",  # green r4/r9/r14; temporal family via
-    #    temporal_sessionize (in-window r15)
-    "text_lm_quality_sampled",  # green r7-r9/r14; char-LM family via
-    #    text_lm_quality_score (in-window r15)
-    "sim_truncate_renorm",  # green r7-r9/r14; quantize/truncate family
-    #    via sim_quantize_int8 (in-window r15)
-    "sim_kmeans_clusters",  # green r7-r9/r14; k-means family via
-    #    sim_kmeans_incremental + sim_label_centroids (in-window r15)
-    "training_token_budget",  # green r7-r9/r14; budget family via
-    #    pipeline_domain_mix + training_chunk_sliding (in-window r15)
-    "text_unigram_encode",  # green r12/r14; unigram family via
-    #    text_lm_quality_score (in-window r15); prebuilt bench arm
-    #    stays
-    "text_unicode_scrub",  # green r12/r14; scrub family via
-    #    text_pii_scrub (in-window r15)
-    "text_gopher_quality_gate",  # green r12/r14; quality-gate family
-    #    via text_repetition_stats + text_lm_quality_score (in-window
-    #    r15)
-    "pipeline_ccnet_buckets",  # green r12/r14; quantile-bucket family
-    #    via text_length_percentiles (in-window r15)
-    "training_contamination_report",  # green r12/r14; gram-join
-    #    family via fuzzy_blocking_recall_eval (in-window r15);
-    #    decontamination keeps its local battery
-    "graph_pagerank_quantized",  # green r12/r14; graph family via
-    #    graph_triangle_incremental (in-window r15)
-    "pipeline_corpus_diff",  # green r12/r14; diff-chain family via
-    #    pipeline_diff_minhash_chain (in-window r15)
-    "curation_dedup_lines_within_doc",  # green r12/r14; curation
-    #    family via curation_remove_frequent_lines (in-window r15)
-    "stream_bm25_index_incremental",  # green r12/r14; incremental
-    #    search-index family via x21_inverted_index_search +
-    #    x21_search_feed (in-window r15); foreachBatch soaks stay
-    "feeds_decayed_trending",  # green r12/r14; feed family via
-    #    o6_related_feed_sample + x21_search_feed (in-window r15)
-    # ------------------------------------------------------------------
-    # ...then the 24 r14-singles (the r13-borns whose first driver
-    # green was r14; the same documented displacement exception as
-    # r13's 10 and r14's 14). Their staleness bound is r18; they are
-    # pre-named as the FRONT of the r18 tranche (see the r16/r17
-    # ledger in the ROUND 16/17 pre-naming above) — NOT r16, which is
-    # fully consumed by the overdue r11-era tranche:
-    # ------------------------------------------------------------------
-    "sim_mmr_rerank_batch",  # green r14
-    "sketch_kmv_source_overlap",  # green r14
-    "graph_cc_incremental",  # green r14
-    "curation_keyword_tag",  # green r14
-    "curation_ngram_novelty",  # green r14
-    "layout_hilbert_key",  # green r14
-    "dedup_lsh_recall_eval",  # green r14
-    "training_rendezvous_shard",  # green r14
-    "temporal_gap_fill",  # green r14
-    "graph_triangle_count",  # green r14
-    "sketch_hll_distinct",  # green r14
-    "curation_url_dedup",  # green r14
-    "text_token_entropy",  # green r14
-    "ann_multiprobe_recall",  # green r14
-    "training_cluster_split",  # green r14
-    "temporal_ohlc_rollup",  # green r14
-    "dedup_containment_probe",  # green r14
-    "sample_weighted_reservoir",  # green r14
-    "quality_referential_audit",  # green r14
-    "dedup_prefix_filter_join",  # green r14
-    "dedup_fuzzy_edit_match",  # green r14
-    "sketch_hll_rollup",  # green r14
-    "pipeline_source_scorecard",  # green r14
-    "temporal_asof_tolerance",  # green r14
-]
-
-
 def registry() -> dict[str, QueryDef]:
-    head = {n: d for n, d in _REGISTRY.items() if n not in _DEPRIORITIZED}
-    tail = {n: _REGISTRY[n] for n in _DEPRIORITIZED if n in _REGISTRY}
-    return {**head, **tail}
+    """Every entry, in registration order."""
+    return dict(_REGISTRY)
 
 
 _FEED_COLS = ["author", "permlink", "title", "created_at", "app_name", "num_votes"]
@@ -1988,9 +1338,7 @@ def text_language_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-3 curation operators (registered past the driver window this
-# round — local oracle twins cover them; rotate into the window next
-# round once the round-3 window entries have their driver rows).
+# Round-3 curation operators
 # ===========================================================================
 
 
@@ -3418,8 +2766,7 @@ def w5_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # smoothed, scored in EXACT integer arithmetic (quantized probability
 # q = scale*(C3+1) DIV (Cctx+k)) — no libm log, no float summation
 # order, so the scores are bit-identical across engines. The model is
-# |charset|^3 rows -> both count tables broadcast. Born past the
-# 50-entry window this round; rotates in next round.
+# |charset|^3 rows -> both count tables broadcast.
 @q(
     "text_lm_quality_score",
     _ORACLES["text_lm_quality_score"],
@@ -3984,7 +3331,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# BPE ENCODE (round 10, born in tail — enters with the r11 tranche):
+# BPE ENCODE (round 10):
 # the apply half of the tokenizer loop — train 3 merges on the corpus,
 # then price every document in post-merge BPE symbols via the
 # (word → symbol count) vocab join. Composes the trainer's bounded
@@ -4308,11 +3655,9 @@ def lineitem_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-11+ entries live in sibling modules (VERDICT r10 item 9: stop
-# growing this file). The import MUST stay at the very end: those
-# modules call @q at import time, and appending their registrations
-# AFTER the 145 above preserves the insertion order the driver's
-# 50-slot window keys on.
+# Further entries live in sibling modules. The import stays at the end:
+# those modules import ``q`` and the shared oracle fragments from here,
+# and register their entries at import time.
 # ---------------------------------------------------------------------------
 from . import queries_r11  # noqa: E402,F401
 from . import queries_r12  # noqa: E402,F401

@@ -6,11 +6,8 @@ multi-line implicit string concatenations); ``queries.py`` now passes
 ``_ORACLES[name]`` instead. Shared SQL fragments/builders live in
 ``oracle_common.py``. Round-11+ entries keep their oracles next to
 their registrations in per-round modules (queries_r11.py etc.) — this
-module only holds the r1-r10 surface.
-
-Order note: this dict's insertion order mirrors the @q registration
-order for readability, but ONLY queries.py's decorator execution order
-determines the driver's 50-slot window.
+module only holds the r1-r10 surface. This dict's insertion order
+mirrors the @q registration order for readability.
 """
 
 from __future__ import annotations

@@ -1,11 +1,8 @@
-"""Round-11 registry entries, in their own module per the VERDICT r10
-ask to stop growing ``queries.py`` (~6,400 lines, half oracle SQL):
-new rounds register here; ``queries.py`` imports this module at its
-END so these entries append AFTER the 145 existing registrations —
-insertion order (which the driver's 50-slot window depends on) is
-untouched.
+"""Round-11 registry entries, in their own module so ``queries.py``
+(~6,400 lines, half oracle SQL) stops growing; ``queries.py`` imports
+this module at its end, so these entries register after its own.
 
-In-window entries (the 4 slots the r11 rotation reserved):
+Among its entries:
 - text_unigram_lm_train — SentencePiece-style unigram tokenizer
   trainer (hard-EM + prune), unrolled-recurrence oracle GENERATED by
   ``_unigram_oracle`` (per-position DP steps and backtrace unrolled
@@ -18,12 +15,6 @@ In-window entries (the 4 slots the r11 rotation reserved):
 - dedup_remove_duplicate_spans_maximal — span-verified duplicate
   removal (stride-1 windows coalesced, then the FULL span string
   re-verified corpus-wide)
-
-Born-in-tail entries (r12 tranche; see queries._DEPRIORITIZED):
-text_unigram_encode, text_unicode_scrub,
-search_bm25_index_incremental, sim_ivfpq_search,
-text_gopher_quality_gate, pipeline_ccnet_buckets,
-training_contamination_report.
 """
 
 from __future__ import annotations
@@ -565,8 +556,7 @@ def dedup_remove_duplicate_spans_maximal(
     )
 
 
-# Unigram ENCODE arm (round 11, BORN IN TAIL — enters with the r12
-# tranche like text_bpe_encode did in r10/r11): train the 2-iteration
+# Unigram ENCODE arm (round 11): train the 2-iteration
 # unigram vocabulary on the corpus, then Viterbi-price every document
 # in pieces via the (word -> piece-count) join. Long words and
 # vocab-unseen characters take the single-char coverage fallback.
@@ -583,15 +573,14 @@ def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Unicode tokenization pre-scrub (round 11, BORN IN TAIL — r12
-# tranche): the corpus-ingest operator that DISCHARGES the documented
-# token_pieces/tokens divergence (ADVICE r10) and the \x01-sentinel
-# caveat, instead of just documenting them. The fixture injects the
-# divergent codepoints (U+212A KELVIN, U+0130 dotted I) and C0
-# controls into 1/7 of docs; the entry asserts-by-construction that
-# the two tokenizations AGREE on the scrubbed text (the
-# tokenizations_agree column must be uniformly true — a regression in
-# either tokenizer shows as a hash mismatch).
+# Unicode tokenization pre-scrub (round 11): the corpus-ingest operator
+# that DISCHARGES the documented token_pieces/tokens divergence (ADVICE
+# r10) and the \x01-sentinel caveat, instead of just documenting them.
+# The fixture injects the divergent codepoints (U+212A KELVIN, U+0130
+# dotted I) and C0 controls into 1/7 of docs; the entry
+# asserts-by-construction that the two tokenizations AGREE on the
+# scrubbed text (the tokenizations_agree column must be uniformly true —
+# a regression in either tokenizer shows as a hash mismatch).
 @q(
     "text_unicode_scrub",
     r"""
@@ -661,13 +650,13 @@ def text_unicode_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Incremental BM25 index maintenance (round 11, BORN IN TAIL — r12
-# tranche): the update_minhash_index anti-join-and-append pattern on
-# the posting table. The fixture re-ingests 1/3 of the corpus: the
-# base index is built with STALE text for those docs (an appended
-# marker), then bm25_index_merge folds the current versions in. The
-# oracle derives per-doc stats DIRECTLY from the current corpus — the
-# merge must equal a fresh rebuild, stale rows gone, no doc dropped.
+# Incremental BM25 index maintenance (round 11): the
+# update_minhash_index anti-join-and-append pattern on the posting
+# table. The fixture re-ingests 1/3 of the corpus: the base index is
+# built with STALE text for those docs (an appended marker), then
+# bm25_index_merge folds the current versions in. The oracle derives
+# per-doc stats DIRECTLY from the current corpus — the merge must equal
+# a fresh rebuild, stale rows gone, no doc dropped.
 @q(
     "search_bm25_index_incremental",
     f"""
@@ -802,7 +791,7 @@ def _ivfpq_oracle(
     """
 
 
-# Composed IVF-PQ search (round 11, BORN IN TAIL — r12 tranche): the
+# Composed IVF-PQ search (round 11): the
 # full coarse-prune + per-cell residual-ADC pipeline over the fixture
 # models. The Spark plan is the 100 TB partition-pruning story (probe
 # nprobe of n_cells partitions, read codes not vectors); the oracle
@@ -828,7 +817,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Gopher quality-filter rules (round 11, BORN IN TAIL — r12 tranche):
+# Gopher quality-filter rules (round 11):
 # the Rae et al. §A1.1 rule set with integer-quantized ratios, the
 # published starting point of MassiveText-style curation. The fixture
 # injects rule-triggering content (bullet lines, ellipsis line-ends,
@@ -925,7 +914,7 @@ def text_gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gopher_quality_gate(aug, "text", "doc_id")
 
 
-# CCNet perplexity bucketing (round 11, BORN IN TAIL — r12 tranche):
+# CCNet perplexity bucketing (round 11):
 # head/middle/tail at exact 30/35/35 score quantiles of the integer
 # char-LM score — the Wenzek et al. conditioning signal. The oracle
 # WRAPS the existing text_lm_quality_score oracle verbatim (imported
@@ -960,11 +949,11 @@ def pipeline_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ccnet_buckets(d, "text", "doc_id")
 
 
-# Per-benchmark contamination report (round 11, BORN IN TAIL — r12
-# tranche): the breakdown curation teams publish next to the aggregate
-# decontaminate stats — per benchmark (source here): its distinct-gram
-# count, training docs sharing >= 1 gram, and distinct (doc, gram)
-# overlap pairs. Benchmarks with zero hits keep their row.
+# Per-benchmark contamination report (round 11): the breakdown curation
+# teams publish next to the aggregate decontaminate stats — per
+# benchmark (source here): its distinct-gram count, training docs
+# sharing >= 1 gram, and distinct (doc, gram) overlap pairs. Benchmarks
+# with zero hits keep their row.
 @q(
     "training_contamination_report",
     """
@@ -1023,14 +1012,14 @@ def training_contamination_report(
     )
 
 
-# Perceptual image near-dup via dHash (round 11, BORN IN TAIL — r12
-# tranche): image dedup joined to the text-dedup playbook — codec-free
-# dHash signatures over constructed 16x16 PPMs (pixel gray is pure
-# event arithmetic, 5 image classes), distinct-hash pre-collapse,
-# Hamming-LSH band candidates, exact bit_count(xor) verify. The oracle
-# re-derives each class's dhash arithmetically (grid sample = index
-# math) and MIRRORS the banded candidate rule (shared-band OR-chain),
-# so the documented banding recall trade can never split the engines.
+# Perceptual image near-dup via dHash (round 11): image dedup joined to
+# the text-dedup playbook — codec-free dHash signatures over constructed
+# 16x16 PPMs (pixel gray is pure event arithmetic, 5 image classes),
+# distinct-hash pre-collapse, Hamming-LSH band candidates, exact
+# bit_count(xor) verify. The oracle re-derives each class's dhash
+# arithmetically (grid sample = index math) and MIRRORS the banded
+# candidate rule (shared-band OR-chain), so the documented banding
+# recall trade can never split the engines.
 @q(
     "multimodal_dhash_near_dup",
     """
@@ -1096,14 +1085,14 @@ def multimodal_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dhash_near_dup_counts(hashes, max_hamming=4, bucket_cap=64)
 
 
-# Audio near-dup via PCM energy fingerprints (round 11, BORN IN TAIL —
-# r12 tranche): the audio sibling of the dHash entry — 8-bit PCM WAVs
-# with REAL payloads constructed from event arithmetic (4 waveform
-# classes), decoded codec-free by the PCM kernel, fingerprinted as a
-# 16-bit energy-envelope hash, then counted through the SAME
-# Hamming-LSH machinery (dhash_near_dup_counts, 4-bit bands). The
-# oracle re-derives each class's fingerprint from the window-energy
-# arithmetic and mirrors the banded rule.
+# Audio near-dup via PCM energy fingerprints (round 11): the audio
+# sibling of the dHash entry — 8-bit PCM WAVs with REAL payloads
+# constructed from event arithmetic (4 waveform classes), decoded
+# codec-free by the PCM kernel, fingerprinted as a 16-bit
+# energy-envelope hash, then counted through the SAME Hamming-LSH
+# machinery (dhash_near_dup_counts, 4-bit bands). The oracle re-derives
+# each class's fingerprint from the window-energy arithmetic and mirrors
+# the banded rule.
 @q(
     "multimodal_audio_fingerprint",
     """
@@ -1182,7 +1171,7 @@ def multimodal_audio_fingerprint(
     )
 
 
-# Integer-quantized PageRank (round 11, BORN IN TAIL — r12 tranche):
+# Integer-quantized PageRank (round 11):
 # the centrality sibling of connected_components. Edges derive from
 # event arithmetic (97-node ring-ish graph) so both engines build the
 # identical graph; two damped iterations unrolled in the oracle, all
@@ -1239,7 +1228,7 @@ def graph_pagerank_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_quantized(edges, "src", "dst", iters=2)
 
 
-# Corpus snapshot diff (round 11, BORN IN TAIL — r12 tranche): the
+# Corpus snapshot diff (round 11): the
 # per-ingest-cycle audit that produces the delta the incremental
 # index-maintenance family consumes. Fixture: old = docs with 1/3
 # carrying stale text and 1/7 missing; new = current docs with 1/5
@@ -1289,10 +1278,10 @@ def pipeline_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_diff(old, new, "doc_id", "text")
 
 
-# Intra-document repeated-line removal (round 11, BORN IN TAIL — r12
-# tranche): the C4 within-page boilerplate cut, complementing the
-# corpus-level passage/span family. Fixture injects duplicated lines
-# (nav-row style) around the original text for 1/6 of docs.
+# Intra-document repeated-line removal (round 11): the C4 within-page
+# boilerplate cut, complementing the corpus-level passage/span family.
+# Fixture injects duplicated lines (nav-row style) around the original
+# text for 1/6 of docs.
 @q(
     "curation_dedup_lines_within_doc",
     """
@@ -1345,15 +1334,15 @@ def curation_dedup_lines_within_doc(
     return dedup_lines_within_doc(aug, "text", "doc_id")
 
 
-# T-layer incremental BM25 index, STREAMED (round 11, BORN IN TAIL —
-# r12 tranche): the bm25_index_merge deployment shape — micro-batches
-# fold into lifetime (postings, doclens) state inside foreachBatch
-# with the passage-counts checkpoint-release discipline. The fixture
-# re-ingests 1/4 of docs in a second arbitrary batch with IDENTICAL
-# text, so the result is micro-batch-ORDER independent while a
-# stale-row leak (merge failing to anti-join the old rows out) doubles
-# tf/n_terms and hash-mismatches. Oracle = per-doc stats of a fresh
-# batch build over the distinct corpus.
+# T-layer incremental BM25 index, STREAMED (round 11): the
+# bm25_index_merge deployment shape — micro-batches fold into lifetime
+# (postings, doclens) state inside foreachBatch with the passage-counts
+# checkpoint-release discipline. The fixture re-ingests 1/4 of docs in a
+# second arbitrary batch with IDENTICAL text, so the result is
+# micro-batch-ORDER independent while a stale-row leak (merge failing to
+# anti-join the old rows out) doubles tf/n_terms and hash-mismatches.
+# Oracle = per-doc stats of a fresh batch build over the distinct
+# corpus.
 @q(
     "stream_bm25_index_incremental",
     f"""
@@ -1439,7 +1428,7 @@ def stream_bm25_index_incremental(
         shutil.rmtree(src, ignore_errors=True)
 
 
-# Half-life-decayed trending (round 11, BORN IN TAIL — r12 tranche):
+# Half-life-decayed trending (round 11):
 # the cliff-free sibling of the max-anchored trendingFeed window —
 # per event-type engagement decays by 2^-(age/half_life) from the
 # corpus max timestamp, all integer (cents-quantized values, shifted

@@ -1,7 +1,5 @@
-"""Round-12 registry entries (sibling-module pattern per VERDICT r10
-item 9; ``queries.py`` imports this module at its very end so these
-registrations append after everything else and the driver's 50-slot
-window ordering is untouched).
+"""Round-12 registry entries (sibling-module pattern; ``queries.py``
+imports this module at its end, after queries_r11).
 
 Both entries discharge VERDICT r11 item 7: the incremental-maintenance
 operators (bm25_index_merge, update_minhash_index) were each verified
@@ -196,13 +194,13 @@ def pipeline_diff_minhash_chain(
     return update_minhash_index(index, delta, "text", "doc_id")
 
 
-# Count-Min sketch heavy-hitter probe (round 12, BORN IN TAIL — r13
-# tranche): the mergeable frequency sketch next to KMV — d md5 hash
-# rows × w counters, bit-identical in both engines, w·d longs of state
-# per slice. w=64 is deliberately small at this SF so collisions
-# actually occur and the min-over-rows estimator does real work; the
-# exact count rides along so the row itself shows est >= exact (the
-# CM guarantee), and the oracle replays the identical sketch.
+# Count-Min sketch heavy-hitter probe (round 12): the mergeable
+# frequency sketch next to KMV — d md5 hash rows × w counters,
+# bit-identical in both engines, w·d longs of state per slice. w=64 is
+# deliberately small at this SF so collisions actually occur and the
+# min-over-rows estimator does real work; the exact count rides along so
+# the row itself shows est >= exact (the CM guarantee), and the oracle
+# replays the identical sketch.
 @q(
     "sketch_cm_heavy_hitters",
     """
@@ -249,7 +247,7 @@ def sketch_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return est.join(exact, "user_id")
 
 
-# Bottom-k-sample quantiles (round 12, BORN IN TAIL — r13 tranche):
+# Bottom-k-sample quantiles (round 12):
 # the KMV selection applied to whole rows = a deterministic uniform
 # sample without replacement, mergeable across slices; nearest-rank
 # quantiles over the sample bound both state and error where exact
@@ -296,12 +294,12 @@ def sketch_sample_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_quantiles(samp, ["event_type"], "v", qs=(25, 50, 75))
 
 
-# Corpus-wide frequent-line removal (round 12, BORN IN TAIL — r13
-# tranche): the RefinedWeb/CCNet boilerplate cut. Fixture injects a
-# banner line into half the corpus (removed everywhere, incl. from
-# docs where it IS half the content) and a rare disclaimer into 1/97
-# (below min_docs -> kept); the synthetic corpus's own cross-doc
-# repeated lines flag organically and the oracle mirrors them.
+# Corpus-wide frequent-line removal (round 12): the RefinedWeb/CCNet
+# boilerplate cut. Fixture injects a banner line into half the corpus
+# (removed everywhere, incl. from docs where it IS half the content) and
+# a rare disclaimer into 1/97 (below min_docs -> kept); the synthetic
+# corpus's own cross-doc repeated lines flag organically and the oracle
+# mirrors them.
 @q(
     "curation_remove_frequent_lines",
     """
@@ -384,14 +382,13 @@ def _km_cents_values_sql(cents: list[list[float]]) -> str:
     return f"(VALUES {rows}) c(cluster, carr)"
 
 
-# Incremental k-means via mergeable sufficient statistics (round 12,
-# BORN IN TAIL — r13 tranche): the mini-batch primitive of the
-# incremental-maintenance family applied to clustering — per-slice
-# (cluster, dim, s_q, n_points) stats under fixture centroids, FOLDED
-# across two corpus halves, must equal the whole-corpus stats (exact
-# integer sums). The oracle computes the whole-corpus side; the Spark
-# side goes through the fold, so a fold bug (double-count, dropped
-# slice, wrong key) hash-mismatches.
+# Incremental k-means via mergeable sufficient statistics (round 12):
+# the mini-batch primitive of the incremental-maintenance family applied
+# to clustering — per-slice (cluster, dim, s_q, n_points) stats under
+# fixture centroids, FOLDED across two corpus halves, must equal the
+# whole-corpus stats (exact integer sums). The oracle computes the
+# whole-corpus side; the Spark side goes through the fold, so a fold bug
+# (double-count, dropped slice, wrong key) hash-mismatches.
 @q(
     "sim_kmeans_incremental",
     f"""
@@ -434,7 +431,7 @@ def sim_kmeans_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_fold_suffstats(*halves)
 
 
-# Ingest dispatch AUDIT (round 12, BORN IN TAIL — r13+ tranche): the
+# Ingest dispatch AUDIT (round 12): the
 # dead-letter view of build_follows — every drop class the dispatch
 # performs silently (each matching a reference behavior or documented
 # divergence) becomes a labeled row. Fixture arms one op per reason
@@ -513,7 +510,7 @@ def ingest_follows_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H completion block (round 12, all BORN IN TAIL — r13+): the six
+# TPC-H completion block (round 12): the six
 # query shapes the relational-depth suite was missing (Q2/Q9/Q11/Q12/
 # Q16/Q20). The testdata has no PARTSUPP table and lineitem carries no
 # shipmode/commit/receipt dates; r13 promoted Q2/Q9/Q11/Q16/Q20 to

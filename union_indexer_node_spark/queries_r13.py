@@ -1,8 +1,5 @@
-"""Round-13 registry entries. Imported by ``queries.py`` AFTER
-queries_r12 so registration order appends to the tail of the
-insertion sequence (all r13-born entries start life in
-``_DEPRIORITIZED`` anyway, per the rotation plan — they enter the
-driver window with the r14 tranche).
+"""Round-13 registry entries. Imported by ``queries.py`` after
+queries_r12.
 """
 
 from __future__ import annotations
@@ -83,7 +80,7 @@ _MMR_BATCH_QIDS = (0, 1, 7)
 # window + one applyInPandas), zero driver round trips. The oracle is
 # the serving oracle's unrolled greedy chain instantiated per query
 # and UNIONed, so this entry ALSO pins batch == serving cross-engine
-# (the serving entry stays in-window r13 with the single-query chain).
+# (the serving entry keeps the single-query chain).
 @q(
     "sim_mmr_rerank_batch",
     "WITH "

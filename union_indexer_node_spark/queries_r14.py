@@ -1,13 +1,9 @@
-"""Round-14 registry entries. Imported by ``queries.py`` AFTER
-queries_r13 so registration order appends to the tail of the
-insertion sequence (r14-born entries start life in ``_DEPRIORITIZED``
-per the rotation plan — they enter the driver window with the r15
-tranche; VERDICT r13 item 2 capped r14 births at the r15 window's
-free slots, so r14 birthed exactly four: this module's two entries
-(the blocking-recall eval and the incremental triangle fold), plus
-the two TPC-H faithful promotions that live beside their retired
-shapes' registration sites — tpch_q12_shipmode in queries_r12.py and
-tpch_q21_waiting_supplier in queries.py).
+"""Round-14 registry entries. Imported by ``queries.py`` after
+queries_r13. Round 14 added four entries: this module's two (the
+blocking-recall eval and the incremental triangle fold), plus the two
+TPC-H faithful promotions that live beside their retired shapes'
+registration sites — tpch_q12_shipmode in queries_r12.py and
+tpch_q21_waiting_supplier in queries.py.
 """
 
 from __future__ import annotations

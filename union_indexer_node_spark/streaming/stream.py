@@ -109,11 +109,9 @@ def _fold_stream(
 
 def build_posts_batch(batch: DataFrame, current: DataFrame | None) -> DataFrame:
     """The posts stream's rows for one micro-batch: ``build_posts`` over
-    the batch's ops, with the snapshot's allowed keys (``current``, None
-    before the first batch) seeding the J9 reply closure, plus the
-    ``created_date`` partition column."""
-    known = None if current is None else current.filter(F.col("allowed_by_parent"))
-    return build_posts(batch, known_allowed=known).withColumn(
+    the batch's ops against the snapshot (``current``, None before the
+    first batch), plus the ``created_date`` partition column."""
+    return build_posts(batch, snapshot=current).withColumn(
         "created_date", F.to_date("created_at")
     )
 
@@ -132,11 +130,13 @@ def start_posts_stream(
     against the existing snapshot resolves the final winner per key by
     (block_height, tx_idx, op_idx) — identical outcome to a full batch
     rebuild for every field whose value is carried by the winning event
-    (title, metadata, status...). Cross-event folds (X13 body patches)
-    are exact when edits of one post land in one batch — otherwise the
-    replacement-body fallback applies; a full deterministic rebuild
-    (the batch pipeline) remains the reconciliation path, exactly like
-    the reference's reindex twin worker (hive-stream-reindex.ts).
+    (title, metadata, status...). The X13 body fold of a published post
+    resumes from its stored body (``build_posts``), so a patch edit
+    landing in a later batch than its post applies as in the full
+    rebuild. A full deterministic rebuild (the batch pipeline) remains
+    the reconciliation path for what the notes below leave out,
+    exactly like the reference's reindex twin worker
+    (hive-stream-reindex.ts).
 
     The J9 reply closure of a batch starts from the batch's allowed
     roots and from the snapshot's allowed posts its comments reply to
@@ -145,7 +145,8 @@ def start_posts_stream(
     batch are not re-derived: a reply that lands BEFORE its parent keeps
     allowed_by_parent=false when the parent arrives later, and so do the
     snapshot descendants of a post an edit re-types. The full batch
-    rebuild reconciles both, as it does the cross-batch body folds.
+    rebuild reconciles both, and a body edit older than the post's
+    stored winning event (a backfill), which the resumed fold skips.
 
     Cross-batch aggregates are inherited, not recomputed: a later
     batch's build_posts sees only that batch's events, so its
@@ -158,14 +159,15 @@ def start_posts_stream(
     partition overwrite) — write cost is O(touched days). Each touched
     date is rewritten as one file, or one per advisory-size slice of a
     hot date (``sources.sinks.overwrite_partitions``), however many
-    partitions the merged frame has. The read side
-    is honest-O(rows-of-key-columns): finding the old dates / prior
-    timestamps of updated keys scans the snapshot's (author, permlink,
-    created_at, updated_at, created_date) columns (parquet
-    column-pruned, not full rows) each batch. Bounding the read to
-    O(touched keys) as well needs a key -> created_date sidecar index
-    or a transactional format; on Delta/Iceberg all of this is one
-    MERGE. A partition whose last surviving row was migrated away is
+    partitions the merged frame has. The read side is O(snapshot
+    rows) in a few columns: finding the old dates / prior timestamps
+    of updated keys scans the snapshot's (author, permlink, created_at,
+    updated_at, created_date) columns, and resuming body folds scans
+    its (author, permlink, body, block_height, tx_idx, op_idx) columns
+    (parquet column-pruned, not full rows), each batch. Bounding the
+    read to O(touched keys) as well needs a key -> created_date sidecar
+    index or a transactional format; on Delta/Iceberg all of this is
+    one MERGE. A partition whose last surviving row was migrated away is
     removed explicitly — dynamic overwrite cannot drop a partition it
     writes zero rows into.
     """
