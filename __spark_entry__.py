@@ -16,7 +16,7 @@ from union_indexer_node_spark import queries as _q
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _q.social_feed_by_app(spark, "/root/testdata/sf0.001")
+    return _q.registry()["social_feed_by_app"].fn(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -24,6 +24,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: qd.oracle for name, qd in _q.registry().items() if qd.oracle is not None
-    }
+    return {name: qd.oracle for name, qd in _q.registry().items()}

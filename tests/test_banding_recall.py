@@ -15,7 +15,7 @@ import math
 from pyspark.sql import functions as F
 
 from union_indexer_node_spark.pipelines.ann_lsh import query_bucket
-from union_indexer_node_spark.queries import _ANN_PLANES
+from union_indexer_node_spark.queries.similarity import _ANN_PLANES
 
 DIM = 64
 N_BASE = 150

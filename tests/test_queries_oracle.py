@@ -33,3 +33,21 @@ def test_oracle_match(spark, duck, name):
     ddf = duck.execute(qd.oracle).df()
     errs = compare(sdf, ddf, name)
     assert not errs, "\n".join(errs)
+
+
+def test_q_rejects_duplicate_name_and_missing_oracle():
+    """Registering a taken name, or an entry without oracle SQL, raises
+    before the registry changes."""
+    before = q.registry()
+
+    def fn(spark, sf_dir):
+        raise AssertionError("never registered, never run")
+
+    with pytest.raises(ValueError):
+        q.q("social_feed_by_app", "SELECT 1")(fn)
+    for oracle in (None, ""):
+        with pytest.raises(ValueError):
+            q.q("q_without_oracle", oracle)(fn)
+    after = q.registry()
+    assert list(after) == list(before)
+    assert all(after[name] is before[name] for name in before)

@@ -241,7 +241,7 @@ def test_pq_adc_trained_recall_beats_floor_and_fixture(spark):
         pq_adc_topk,
         train_pq_codebooks,
     )
-    from union_indexer_node_spark.queries_r11 import (
+    from union_indexer_node_spark.queries.similarity import (
         _PQ_QUERY_VEC,
         _pq_fixture_codebooks,
     )
@@ -1040,7 +1040,7 @@ def test_pagerank_sink_and_hub_semantics(spark):
     """A pure hub outranks the damped floor by exactly the hand-rolled
     recurrence; no-in-edge nodes hold the floor; duplicate edges vote
     once (the distinct guard)."""
-    from union_indexer_node_spark.pipelines.training import (
+    from union_indexer_node_spark.pipelines.graph import (
         pagerank_quantized,
     )
 

@@ -335,9 +335,7 @@ def test_stream_maintained_indexes_match_batch_builds_sf01(
         bm25_index,
         bm25_index_merge,
     )
-    from union_indexer_node_spark.pipelines.similarity import (
-        _free_local_checkpoint,
-    )
+    from union_indexer_node_spark.session import free_local_checkpoint
 
     d = tables.load(spark, SOAK_SF_DIR, "documents").select(
         "doc_id", "text"
@@ -422,7 +420,7 @@ def test_stream_maintained_indexes_match_batch_builds_sf01(
         )
         if superseded is not None:
             for f in superseded:
-                _free_local_checkpoint(f)
+                free_local_checkpoint(f)
 
     stream = (
         spark.readStream.schema(d.schema)
@@ -867,7 +865,7 @@ def test_ivfpq_prebuilt_state_paths_match_composed(spark):
         ivfpq_encode,
         ivfpq_topk,
     )
-    from union_indexer_node_spark.queries_r11 import (
+    from union_indexer_node_spark.queries.similarity import (
         _PQ_QUERY_VEC,
         _ivf_fixture_cells,
         _pq_fixture_codebooks,

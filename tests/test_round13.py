@@ -443,7 +443,7 @@ class TestCCIncremental:
     def test_fold_equals_full_resolve(self, spark):
         import random
 
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             cc_incremental,
             connected_components,
         )
@@ -462,7 +462,7 @@ class TestCCIncremental:
         assert inc.equals(ref)
 
     def test_three_fold_chain_and_born_nodes(self, spark):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             cc_incremental,
             connected_components,
         )
@@ -489,7 +489,7 @@ class TestCCIncremental:
         assert set(self._cc_pdf(labels).cluster_id) == {1}
 
     def test_same_component_edge_is_noop(self, spark):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             cc_incremental,
             connected_components,
         )
@@ -721,7 +721,7 @@ def test_stream_maintained_kmeans_suffstats_match_batch_sf01(
         kmeans_from_suffstats,
         kmeans_suffstats,
     )
-    from union_indexer_node_spark.queries_r12 import _km_fixture_cents
+    from union_indexer_node_spark.queries.similarity import _km_fixture_cents
 
     cents = _km_fixture_cents()
     emb = tables.load(spark, SOAK_SF_DIR, "embeddings").select(
@@ -1407,7 +1407,7 @@ class TestTriangleCount:
     participation via degree-ordered orientation."""
 
     def _counts(self, spark, edges):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             triangle_count,
         )
 
@@ -1448,7 +1448,7 @@ class TestTriangleCount:
         assert self._counts(spark, edges) == {n: 1 for n in (1, 2, 3, 7, 8, 9)}
 
     def test_plan_has_no_cartesian(self, spark):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             triangle_count,
         )
 
@@ -1642,7 +1642,7 @@ class TestMultiprobeRecall:
 
     def test_recall_and_candidates_monotone_in_radius(self, spark):
         from union_indexer_node_spark import tables
-        from union_indexer_node_spark.oracle_common import _ANN_PLANES
+        from union_indexer_node_spark.queries.similarity import _ANN_PLANES
         from union_indexer_node_spark.pipelines.ann_lsh import (
             multiprobe_recall,
         )
@@ -2126,7 +2126,7 @@ class TestReviewFixesR13Session2:
         assert abs(e["est_distinct"] - 2000) < 0.26 * 2000
 
     def test_multiprobe_emits_empty_radius_rows(self, spark):
-        from union_indexer_node_spark.oracle_common import _ANN_PLANES
+        from union_indexer_node_spark.queries.similarity import _ANN_PLANES
         from union_indexer_node_spark.pipelines.ann_lsh import (
             multiprobe_recall,
         )

@@ -46,7 +46,7 @@ def test_stream_maintained_cc_labels_match_scratch_solve_sf01(
     at 100 TB. The edge fixture is graph_cc_incremental's (events-
     derived hashed endpoints, ~2k-node near-dense graph at sf0.1)."""
     from union_indexer_node_spark import tables
-    from union_indexer_node_spark.pipelines.training import (
+    from union_indexer_node_spark.pipelines.graph import (
         cc_incremental,
         connected_components,
     )
@@ -117,7 +117,7 @@ def test_stream_maintained_canonical_edges_serve_triangle_count_sf01(
     whole graph — and triangle_count over the maintained store must
     byte-match the from-scratch solve over all raw edges."""
     from union_indexer_node_spark import tables
-    from union_indexer_node_spark.pipelines.training import triangle_count
+    from union_indexer_node_spark.pipelines.graph import triangle_count
 
     edges = (
         tables.load(spark, SOAK_SF_DIR, "events")
@@ -187,7 +187,7 @@ def test_stream_maintained_incremental_triangle_counts_sf01(
     anti-join makes the fold idempotent under at-least-once
     delivery)."""
     from union_indexer_node_spark import tables
-    from union_indexer_node_spark.pipelines.training import (
+    from union_indexer_node_spark.pipelines.graph import (
         canonical_edges,
         triangle_count,
         triangle_count_incremental,
@@ -266,7 +266,7 @@ class TestTriangleIncremental:
         return cnt
 
     def _fold(self, spark, old, new):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             canonical_edges,
             triangle_count,
             triangle_count_incremental,

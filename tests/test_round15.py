@@ -392,7 +392,7 @@ class TestTriangleDegreeState:
 
     @staticmethod
     def _store(spark, edge_list):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             canonical_edges,
             triangle_count,
         )
@@ -402,7 +402,7 @@ class TestTriangleDegreeState:
         return edges, triangle_count(edges, "a", "b")
 
     def test_degree_path_bit_equal_to_recompute(self, spark):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             triangle_count_incremental,
         )
 
@@ -436,11 +436,11 @@ class TestTriangleDegreeState:
         assert _fp(d_out) == _fp(_degrees_of(e_deg))
 
     def test_degree_frame_threads_across_folds(self, spark):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             canonical_edges,
             triangle_count,
         )
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             triangle_count_incremental,
         )
 
@@ -470,7 +470,7 @@ class TestTriangleDegreeState:
         assert _fp(degrees) == _fp(_degrees_of(scratch_edges))
 
     def test_replay_is_noop_for_degrees_too(self, spark):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             triangle_count_incremental,
         )
 
@@ -493,7 +493,7 @@ class TestTriangleDegreeState:
         assert _fp(d2) == _fp(degrees)
 
     def test_bad_degree_columns_raise(self, spark):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             triangle_count_incremental,
         )
 
@@ -531,7 +531,7 @@ class TestTriangleDegreeState:
     def test_fuzz_degree_path_equals_recompute(
         self, spark, store_list, batch_list
     ):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             triangle_count_incremental,
         )
 
@@ -585,7 +585,7 @@ def test_stream_degree_threaded_triangle_soak_sf01(spark, tmp_path):
     the end state must byte-match the from-scratch triangle solve and
     the from-scratch degree aggregate over all edges."""
     from union_indexer_node_spark import tables
-    from union_indexer_node_spark.pipelines.training import (
+    from union_indexer_node_spark.pipelines.graph import (
         canonical_edges,
         triangle_count,
         triangle_count_incremental,
@@ -656,7 +656,7 @@ class TestTriangleAssumeCanonical:
     edge store."""
 
     def test_fast_path_equals_default_on_canonical_input(self, spark):
-        from union_indexer_node_spark.pipelines.training import (
+        from union_indexer_node_spark.pipelines.graph import (
             canonical_edges,
             triangle_count,
         )

@@ -404,7 +404,7 @@ def test_lsh_rejects_bands_not_dividing_k(spark):
 def test_connected_components_string_ids_distributed_arm(spark):
     """The distributed loop must converge for NON-numeric node ids (the
     old sum-based probe crashed under ANSI / false-converged without)."""
-    from union_indexer_node_spark.pipelines.training import connected_components
+    from union_indexer_node_spark.pipelines.graph import connected_components
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")],

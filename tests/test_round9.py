@@ -5,7 +5,7 @@
   wildcards, 1-2 char fallback, full-width/astral unicode) —
   F.contains and the gram equality filters are LITERAL matchers, so
   none of these may change semantics;
-- pin that _free_local_checkpoint's internal-API path actually works
+- pin that free_local_checkpoint's internal-API path actually works
   on this Spark build (a silent fallback would reinstate per-iteration
   checkpoint-storage accumulation — ADVICE r8);
 - one real-Pillow resize round trip (gated: skips where Pillow is
@@ -129,7 +129,7 @@ def test_search_substring_matches_full_scan_property(
 
 
 # ---------------------------------------------------------------------------
-# _free_local_checkpoint: the internal-API fast path must WORK here
+# free_local_checkpoint: the internal-API fast path must WORK here
 # ---------------------------------------------------------------------------
 
 
@@ -140,15 +140,13 @@ def test_free_local_checkpoint_releases_storage_now(spark):
     persisted one, and that the helper's unpersist takes effect
     immediately (storage level drops to NONE) — so the warning fallback
     is genuinely the exceptional path, not the everyday one."""
-    from union_indexer_node_spark.pipelines.similarity import (
-        _free_local_checkpoint,
-    )
+    from union_indexer_node_spark.session import free_local_checkpoint
 
     df = spark.range(0, 1000, 1, 2).localCheckpoint()
     jrdd = df._jdf.queryExecution().analyzed().rdd()
     assert "LogicalRDD" in df._jdf.queryExecution().analyzed().nodeName()
     assert jrdd.getStorageLevel().useMemory()  # checkpoint IS persisted
-    _free_local_checkpoint(df)
+    free_local_checkpoint(df)
     assert not jrdd.getStorageLevel().useMemory()  # released eagerly
 
 

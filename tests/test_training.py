@@ -10,9 +10,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from union_indexer_node_spark.pipelines.graph import connected_components
 from union_indexer_node_spark.pipelines.training import (
     chunk_sliding,
-    connected_components,
     coverage_check,
     decontaminate,
     pack_next_fit,

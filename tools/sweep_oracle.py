@@ -5,8 +5,7 @@ any future above-driver-scale verification).
 Runs every registry entry's Spark form and its DuckDB oracle over the
 SAME parquet directory and compares with the tests/oracle_harness
 discipline (rowcount + schema + order-insensitive values, float
-tolerance). Entries without an oracle get the driver's weaker
-rows-only check. Emits one JSON line per entry to --out as it goes
+tolerance). Emits one JSON line per entry to --out as it goes
 (resumable: already-recorded names are skipped on rerun), then a
 summary line.
 
@@ -138,27 +137,19 @@ def main() -> None:
             try:
                 sdf = qd.fn(spark, sf_dir).toPandas()
                 rec["spark_rows"] = len(sdf)
-                if qd.oracle is None:
-                    # driver-parity weak check: "ran without raising";
-                    # zero_rows flags the suspicious-but-passing case
-                    rec["mode"] = "ran_only_no_value_check"
-                    rec["zero_rows"] = len(sdf) == 0
-                    rec["ok"] = True
+                ddf = _run_oracle(duck, qd.oracle, args.oracle_timeout)
+                if ddf is None:
+                    rec["ok"] = False
+                    rec["mode"] = "oracle_timeout"
+                    rec["err"] = (
+                        f"oracle interrupted after {args.oracle_timeout}s"
+                    )
                 else:
-                    ddf = _run_oracle(duck, qd.oracle, args.oracle_timeout)
-                    if ddf is None:
-                        rec["ok"] = False
-                        rec["mode"] = "oracle_timeout"
-                        rec["err"] = (
-                            f"oracle interrupted after "
-                            f"{args.oracle_timeout}s"
-                        )
-                    else:
-                        rec["oracle_rows"] = len(ddf)
-                        errs = compare(sdf, ddf, name)
-                        rec["ok"] = not errs
-                        if errs:
-                            rec["errs"] = errs[:5]
+                    rec["oracle_rows"] = len(ddf)
+                    errs = compare(sdf, ddf, name)
+                    rec["ok"] = not errs
+                    if errs:
+                        rec["errs"] = errs[:5]
             except Exception as e:  # record, keep sweeping
                 rec["ok"] = False
                 rec["err"] = f"{type(e).__name__}: {e}"[:500]

@@ -38,7 +38,7 @@ from ..functions.scalars import (
     pullout_ipfs_links,
     storage_type,
 )
-from ..pipelines.similarity import _free_local_checkpoint
+from ..session import free_local_checkpoint
 from .editfold import folded_body
 
 def _order():
@@ -324,7 +324,7 @@ def build_posts(
         .localCheckpoint()
     )
     for done in (roots, *levels):
-        _free_local_checkpoint(done)
+        free_local_checkpoint(done)
     posts = posts.join(
         all_allowed.withColumnRenamed("pa", "author").withColumnRenamed(
             "pp", "permlink"

@@ -434,7 +434,7 @@ def leaderboard(
     ``rank_by="pagerank"`` (round 12, opt-in — default stays the
     reference's creator-score ranking, byte-unchanged): rank profiles
     by integer-quantized PageRank over the follow graph
-    (pipelines/training.pagerank_quantized; follower → following
+    (pipelines/graph.pagerank_quantized; follower → following
     edges), the centrality alternative to the engagement formula.
     Requires ``follows``; emitted score = pr_q / 1e6 (the quantization
     scale) so the output schema stays (username, score, rank). Only
@@ -444,7 +444,7 @@ def leaderboard(
     if rank_by == "pagerank":
         if follows is None:
             raise ValueError("rank_by='pagerank' requires the follows table")
-        from ..pipelines.training import pagerank_quantized
+        from ..pipelines.graph import pagerank_quantized
 
         pr = pagerank_quantized(follows, "follower", "following")
         scored = profiles.select("username").join(

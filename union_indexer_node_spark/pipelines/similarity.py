@@ -17,12 +17,11 @@ cross-engine deterministic.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.litarr import lit_doubles, lit_ints
+from ..session import free_local_checkpoint
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -236,41 +235,6 @@ def _quantized(vec_col: str, quant: int) -> Column:
     )
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release a consumed localCheckpoint's storage blocks NOW.
-    ``Dataset.unpersist`` does not cover checkpoint storage, and the
-    async ContextCleaner only reclaims it once the JVM-side RDD becomes
-    weakly reachable — in an iterative loop that lag accumulates one
-    corpus-scale copy per iteration. The checkpointed frame's analyzed
-    plan is a LogicalRDD whose ``rdd`` is exactly the persisted one;
-    unpersisting it is targeted (never touches other caches). The frame
-    MUST NOT be read again afterwards — its data is gone, not
-    recomputable. Best-effort: internal accessors (absent under Spark
-    Connect, brittle across internal-API changes), so failures degrade
-    to the ContextCleaner path rather than raising — but LOUDLY: a
-    silent no-op here reinstates exactly the per-iteration
-    corpus-scale storage accumulation this function exists to prevent,
-    so the fallback logs a warning the first time it happens (once per
-    process, not per iteration — iterative callers would spam)."""
-    global _FREE_CKPT_WARNED
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception as exc:
-        if not _FREE_CKPT_WARNED:
-            _FREE_CKPT_WARNED = True
-            logging.getLogger(__name__).warning(
-                "_free_local_checkpoint: eager checkpoint-storage release "
-                "unavailable (%s: %s); falling back to ContextCleaner-paced "
-                "reclamation — iterative loops may accumulate one "
-                "corpus-scale storage copy per iteration until GC",
-                type(exc).__name__,
-                exc,
-            )
-
-
-_FREE_CKPT_WARNED = False
-
-
 def _quantized_base(
     emb: DataFrame, vec_col: str, id_col: str, quant: int
 ) -> DataFrame:
@@ -390,7 +354,7 @@ def kmeans_centroids(
     cents: list[list[float]] = [list(r["_c"]) for r in seed_rows]
     if not cents:
         if persist_base:
-            _free_local_checkpoint(base)  # empty corpus still checkpointed
+            free_local_checkpoint(base)  # empty corpus still checkpointed
         return cents
     k = len(cents)  # fewer rows than k: every row is its own seed
     dim = len(cents[0])
@@ -479,14 +443,14 @@ def kmeans_centroids(
             # the collect above was this checkpoint's last reader —
             # free its corpus-scale blocks before the next iteration
             # materializes a fresh assignment.
-            _free_local_checkpoint(assigned)
+            free_local_checkpoint(assigned)
         by_cluster = {r["cluster"]: list(r["_c"]) for r in new_rows}
         cents = [by_cluster.get(i, cents[i]) for i in range(k)]
     if persist_base:
         # the loop was the persisted base's last reader; the returned
         # centroids are plain Python floats, so nothing downstream can
         # re-read the checkpoint.
-        _free_local_checkpoint(base)
+        free_local_checkpoint(base)
     return cents
 
 

@@ -11,8 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import tokens
-from .dedup import token_count as _token_count
+from ..session import free_local_checkpoint
+from .dedup import token_count, tokens
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic.
 # (A production build ships larger profiles; the operator shape —
@@ -22,10 +22,6 @@ LANG_PROFILES = {
     "es": ["el", "la", "de", "que", "y", "en", "un"],
     "fr": ["le", "la", "de", "et", "un", "une", "dans"],
 }
-
-
-def token_count(text: Column) -> Column:
-    return _token_count(text)
 
 
 def quality_features(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -435,7 +431,7 @@ def char_lm_quality(
     and remains the oracle path.
     """
     # Guard: Spark's sequence(1, 0) is the DESCENDING [1, 0] (the same
-    # edge _safe_shingles documents), so short docs need an explicit
+    # edge dedup.shingles_from_tokens guards), so short docs need an explicit
     # empty-array arm rather than a clamped upper bound. Two hoists,
     # both measured at sf0.1: (a) lower() into its own column —
     # referencing lower(text) inside the lambda re-lowercases the whole
@@ -737,8 +733,6 @@ def bpe_train_merges(df: DataFrame, text_col: str, *, n_merges: int = 3) -> Data
             "wf",
         )
     )
-    from .similarity import _free_local_checkpoint
-
     state = vocab.localCheckpoint()
     merges: list[tuple[int, str, str, str, int]] = []
     for i in range(n_merges):
@@ -774,9 +768,9 @@ def bpe_train_merges(df: DataFrame, text_col: str, *, n_merges: int = 3) -> Data
             ).alias("ws"),
             "wf",
         ).localCheckpoint()
-        _free_local_checkpoint(state)
+        free_local_checkpoint(state)
         state = nxt
-    _free_local_checkpoint(state)
+    free_local_checkpoint(state)
     return spark.createDataFrame(
         merges,
         "merge_idx int, pair_left string, pair_right string, "
@@ -1048,7 +1042,6 @@ def unigram_lm_train(
     count (ties → piece ASC) when ``topk`` is given.
     """
     from .dedup import tokens
-    from .similarity import _free_local_checkpoint
 
     L, W = max_piece_len, max_word_len
     # vocab-sized (Heaps-law sublinear) and read n_iters + 1 times (the
@@ -1091,7 +1084,7 @@ def unigram_lm_train(
             )
             .localCheckpoint()
         )
-        _free_local_checkpoint(state)
+        free_local_checkpoint(state)
         state = nxt
     out = state.select(
         "piece",

@@ -1,7 +1,7 @@
 """Training-data preparation operators: benchmark decontamination,
-sliding-window chunking, near-dup cluster resolution (connected
-components), greedy sequence packing, and deterministic weighted
-sampling.
+sliding-window chunking, greedy sequence packing, and deterministic
+weighted sampling. Graph algorithms (connected components for near-dup
+clusters, PageRank, triangle counts) live in ``graph.py``.
 
 These extend the dedup/quality layer (SURVEY.md §7 Phase 5 /
 BASELINE.json north star) with the last-mile operations a pre-training
@@ -21,13 +21,6 @@ Scale notes (100 TB):
   independent of n.
 - ``chunk_sliding``: pure per-row expressions (sequence + slice), ZERO
   shuffles; output is ~n_tokens/stride rows per doc.
-- ``connected_components``: iterative min-label propagation; each step
-  shuffles the EDGE set only (LSH candidate pairs, already capped by
-  dedup's bucket cap — not the corpus), with localCheckpoint truncating
-  lineage per iteration exactly like the J9 fixpoint
-  (ingest/posts.py:178). Converges in <= component-diameter steps;
-  near-dup clusters are shallow (dupes of one canonical), so 3-5
-  iterations in practice.
 - ``pack_next_fit``: packing is sequential WITHIN a stratum (that is
   its definition), so the stratum is the parallelism unit and
   applyInPandas hands each stratum to one task as Arrow batches. For a
@@ -50,18 +43,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import md5_bucket, md5_draw, md5_hex, shingles_from_tokens, tokens
-
-
-def _safe_shingles(toks: Column, n: int) -> Column:
-    """Distinct word n-grams, explicitly [] for docs with <n tokens.
-
-    shingles_from_tokens alone would hit Spark's descending
-    ``sequence(1, 0) == [1, 0]`` edge for short docs and fabricate ""
-    grams (see curation.repetition_stats for the same guard).
-    """
-    return F.when(F.size(toks) >= n, shingles_from_tokens(toks, n)).otherwise(
-        F.array().cast("array<string>")
-    )
 
 
 def decontaminate(
@@ -89,7 +70,7 @@ def decontaminate(
     ).localCheckpoint()
     bench_grams = (
         bench_toks.select(
-            F.explode(_safe_shingles(F.col("_toks"), n)).alias("_g")
+            F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g")
         )
         .select(F.md5("_g").alias("_gh"))
         .distinct()
@@ -97,7 +78,7 @@ def decontaminate(
     grams = (
         train.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
         .localCheckpoint()
-        .select(F.col(id_col), _safe_shingles(F.col("_toks"), n).alias("_grams"))
+        .select(F.col(id_col), shingles_from_tokens(F.col("_toks"), n).alias("_grams"))
     )
     exploded = grams.select(
         F.col(id_col),
@@ -166,7 +147,7 @@ def contamination_report(
         .localCheckpoint()
         .select(
             "benchmark",
-            F.explode(_safe_shingles(F.col("_toks"), n)).alias("_g"),
+            F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g"),
         )
         .select("benchmark", F.md5("_g").alias("_gh"))
         .distinct()
@@ -180,7 +161,7 @@ def contamination_report(
         .localCheckpoint()
         .select(
             F.col(id_col),
-            F.explode(_safe_shingles(F.col("_toks"), n)).alias("_g"),
+            F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g"),
         )
         .select(F.col(id_col), F.md5("_g").alias("_gh"))
         .distinct()
@@ -271,7 +252,7 @@ def bloom_decontaminate(
     # partial-aggregates each task down to <= m/64 rows map-side and
     # ships exactly one shuffle of <= m/64 rows per task at any scale.
     positions = bench_toks.select(
-        F.explode(_safe_shingles(F.col("_toks"), n)).alias("_g")
+        F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g")
     ).select(
         F.explode(
             F.array(*[_bloom_pos(F.col("_g"), i, m) for i in range(k)])
@@ -311,7 +292,7 @@ def bloom_decontaminate(
     ).localCheckpoint()  # collapse barrier (see docstring)
     ex = base.select(
         F.col(id_col),
-        F.explode_outer(_safe_shingles(F.col("_toks"), n)).alias("_g"),
+        F.explode_outer(shingles_from_tokens(F.col("_toks"), n)).alias("_g"),
     )
 
     # One reference to the 32 KB bitset literal in the WHOLE plan: the
@@ -430,7 +411,7 @@ def cdc_chunks(
     # Boundary positions: i in [gram, n-1] with hash ≡ 0 (never the
     # final token — a boundary there would create an empty chunk).
     # sequence(gram, n-1) is DESCENDING when n <= gram (the Spark
-    # descending-sequence edge, see _safe_shingles) — guard to [].
+    # descending-sequence edge, see dedup.shingles_from_tokens) — guard to [].
     with_bounds = base.withColumn(
         "_bounds",
         F.when(
@@ -496,655 +477,6 @@ def cdc_chunks(
             ),
         ).alias("chunk_text"),
     )
-
-
-def pagerank_quantized(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    *,
-    iters: int = 2,
-    damping_pct: int = 85,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Integer-quantized PageRank over a directed edge set — the
-    centrality signal social/citation/link graphs feed into creator
-    ranking and crawl prioritization, as the iterative sibling of
-    ``connected_components`` (same bounded-iteration shape, same
-    unrolled-recurrence oracle pattern as k-means/BPE/unigram).
-
-    Every iteration is exact BIGINT arithmetic so any engine replays
-    it bit-for-bit (libm-free, summation-order-free):
-
-        PR_0(v)   = scale
-        PR_{i+1}(v) = ((100 - d) * scale
-                       + d * SUM over in-edges (PR_i(u) div outdeg(u)))
-                      div 100
-
-    Documented simplification vs textbook PageRank ("PageRank-lite",
-    the common ranking-signal variant): dangling-node mass is DROPPED
-    rather than redistributed, and there is no global normalization —
-    the ORDERING (what a ranking consumes) matches the damped walk;
-    absolute mass leaks through sinks. Nodes = src ∪ dst vertices;
-    duplicate edges count once (distinct) so a double-reported edge
-    cannot double-vote.
-
-    Scale shape per iteration: one broadcast-or-shuffle equi-join of
-    the rank vector to the edge list on src (the rank vector is
-    node-sized), one map-side-combining groupBy(dst), one left join
-    back to the node set for in-degree-0 nodes. No driver state at
-    all — the loop is data-independent (fixed ``iters``), so nothing
-    collects; localCheckpoint bounds lineage.
-    """
-    from ..pipelines.similarity import _free_local_checkpoint
-
-    e = (
-        edges.select(
-            F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
-        )
-        .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("_s").alias("_v"))
-        .unionByName(e.select(F.col("_d").alias("_v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    outdeg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_od"))
-    d = damping_pct
-    pr = nodes.select("_v", F.lit(scale).cast("long").alias("_pr"))
-    pr = pr.localCheckpoint()
-    for _ in range(iters):
-        contrib = (
-            e.join(pr, e["_s"] == pr["_v"])
-            .join(outdeg, "_s")
-            .select(
-                F.col("_d").alias("_v"),
-                F.expr("_pr div _od").alias("_c"),
-            )
-            .groupBy("_v")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        nxt = (
-            nodes.join(contrib, "_v", "left")
-            .select(
-                "_v",
-                F.expr(
-                    f"(({100 - d}L * {scale}L)"
-                    f" + {d}L * coalesce(_in, 0L)) div 100"
-                )
-                .cast("long")
-                .alias("_pr"),
-            )
-            .localCheckpoint()
-        )
-        _free_local_checkpoint(pr)
-        pr = nxt
-    return pr.select(F.col("_v").alias("node"), F.col("_pr").alias("pr_q"))
-
-
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    *,
-    max_iter: int = 25,
-    driver_threshold: int = 1_000_000,
-) -> DataFrame:
-    """Connected components over an undirected edge list via iterative
-    min-label propagation: every node's label converges to the smallest
-    node id in its component. Returns (node, cluster_id).
-
-    Physical strategy is size-gated, like Catalyst's broadcast-join
-    choice: an edge set at or below ``driver_threshold`` (default 1M
-    edges ~ 16 MB of longs) is collected and solved with union-find in
-    one pass — a small CC problem costs 2 Spark jobs instead of
-    2 x diameter. Above the threshold, the distributed loop runs: one
-    edge-set join + one node-key aggregate per iteration, lineage
-    truncated per step with localCheckpoint (same pattern as the J9
-    reply-closure fixpoint, ingest/posts.py:178-221), converging within
-    the max component diameter. ``max_iter`` bounds adversarial chains,
-    and non-convergence raises rather than returning a wrong
-    clustering. Both arms produce identical output (tested).
-    """
-    und = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    if und.count() <= driver_threshold:
-        parent: dict = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        # ONE Arrow pull, not toLocalIterator: the iterator form costs
-        # one sequential job round trip PER PARTITION (32 mini-jobs at
-        # the default shuffle parallelism — ~1 s of pure scheduling at
-        # bench scale, measured r15) and yields Row objects; the Arrow
-        # transfer is a single job moving two packed columns (16 MB of
-        # longs at the 1M-edge gate — the bound this arm is sized by),
-        # and the plain-value zip iterates ~5x faster than Row access.
-        pdf = und.toPandas()
-        # .tolist() yields plain Python values (np.int64 keys would
-        # otherwise leak into the createDataFrame rows below)
-        for ra, rb in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            ra, rb = find(ra), find(rb)
-            if ra != rb:
-                # min-id root: matches the label-propagation fixpoint
-                parent[max(ra, rb)] = min(ra, rb)
-        node_t = und.schema["src"].dataType
-        from pyspark.sql.types import StructField, StructType
-
-        out_schema = StructType(
-            [StructField("node", node_t), StructField("cluster_id", node_t)]
-        )
-        # pandas + Arrow, not a list of tuples: the row path pickles
-        # per row and measured 2.7x slower at 2k nodes (r15); the
-        # frame is node-count-bounded by the driver_threshold gate
-        # either way. Empty graphs keep the tuple path — an empty
-        # pandas frame carries no dtypes for Arrow to map to node_t.
-        if not parent:
-            return und.sparkSession.createDataFrame([], out_schema)
-        nodes = list(parent)
-        pdf = pd.DataFrame(
-            {"node": nodes, "cluster_id": [find(n) for n in nodes]}
-        )
-        return und.sparkSession.createDataFrame(pdf, out_schema)
-    labels = (
-        und.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("cluster_id"))
-        .localCheckpoint()
-    )
-    # Convergence probe: min-propagation strictly lowers the label
-    # multiset while anything changes, so the xxhash64-sum fingerprint
-    # changes too — one cheap aggregate per iteration instead of a
-    # self-join + count. The hash makes the probe TYPE-AGNOSTIC: a
-    # plain sum(cluster_id) crashes on string node ids under
-    # default-ANSI Spark 4 (CAST_INVALID_INPUT) and silently returns
-    # NULL==NULL (false convergence after one iteration) without ANSI;
-    # decimal(38,0) keeps 1e12 64-bit terms from overflowing.
-    def _fingerprint(frame: DataFrame):
-        return frame.agg(
-            F.sum(
-                F.xxhash64(F.col("cluster_id").cast("string")).cast(
-                    "decimal(38,0)"
-                )
-            )
-        ).collect()[0][0]
-
-    prev_sum = _fingerprint(labels)
-    for _ in range(max_iter):
-        neigh = (
-            und.join(labels, und.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("_nl"))
-        )
-        labels = (
-            labels.join(neigh, labels.node == neigh.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("_nl", F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        new_sum = _fingerprint(labels)
-        if new_sum == prev_sum:
-            return labels
-        prev_sum = new_sum
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} iterations")
-
-
-def cc_incremental(
-    labels: DataFrame,
-    new_edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    *,
-    max_iter: int = 25,
-    driver_threshold: int = 1_000_000,
-) -> DataFrame:
-    """Fold a batch of NEW edges into an existing connected-components
-    labeling without re-solving the whole graph — the
-    incremental-maintenance arm of `connected_components` (the
-    dedup-cluster analog of bm25_index_merge / update_minhash_index).
-
-    The stored labeling compresses every old component to a star
-    (node → min-member label), so the union graph's components are the
-    components of a SUPER-NODE graph: each new edge endpoint maps to
-    its existing cluster_id (unseen nodes map to themselves), and CC
-    runs over those mapped edges only — O(batch), not O(graph); at
-    typical batch sizes that solver takes `connected_components`'s
-    union-find driver arm (2 jobs, no fixpoint loop). Because every
-    old label IS the min of its members, min-label over super-nodes
-    equals min over all merged members, so the fold lands on exactly
-    the labeling a from-scratch solve over old ∪ new edges produces
-    (pinned by test and oracle).
-
-    The remap (old cluster_id → merged cluster_id) covers affected
-    components only — a tiny broadcast left join + coalesce over the
-    stored labels (map-side; on a cluster_id-bucketed store this is a
-    partition-pruned upsert) — and batch-born nodes append with their
-    solved labels.
-
-    Returns the updated (node, cluster_id) frame.
-    """
-    # Batch-sized by contract; consumed by batch_nodes AND both mapped
-    # endpoint joins — materialize once so whatever produced the batch
-    # (an events scan at bench, an ingest frame in deployment) is not
-    # re-evaluated per consumer (guide §3.3, measured r15: the before
-    # plan re-ran the source scan three times).
-    e = new_edges.select(
-        F.col(a_col).alias("_a"), F.col(b_col).alias("_b")
-    ).localCheckpoint()
-    batch_nodes = (
-        e.select(F.col("_a").alias("node"))
-        .union(e.select(F.col("_b").alias("node")))
-        .distinct()
-    )
-    # super-node of each batch endpoint: its stored label, else itself.
-    # Also batch-sized; read three times (the two mapped endpoint joins
-    # + the batch-born arm) — checkpoint for the same reason as `e`.
-    sup = batch_nodes.join(labels, "node", "left").select(
-        "node",
-        F.coalesce("cluster_id", F.col("node")).alias("_sup"),
-    ).localCheckpoint()
-    mapped = (
-        e.join(
-            F.broadcast(
-                sup.select(
-                    F.col("node").alias("_a"), F.col("_sup").alias("sa")
-                )
-            ),
-            "_a",
-        )
-        .join(
-            F.broadcast(
-                sup.select(
-                    F.col("node").alias("_b"), F.col("_sup").alias("sb")
-                )
-            ),
-            "_b",
-        )
-        .select("sa", "sb")
-    )
-    merged = connected_components(
-        mapped,
-        "sa",
-        "sb",
-        max_iter=max_iter,
-        driver_threshold=driver_threshold,
-    )  # (node = super-node id, cluster_id = merged min label)
-    remap = merged.select(
-        F.col("node").alias("cluster_id"),
-        F.col("cluster_id").alias("_new"),
-    )
-    relabeled = labels.join(F.broadcast(remap), "cluster_id", "left").select(
-        "node",
-        F.coalesce("_new", F.col("cluster_id")).alias("cluster_id"),
-    )
-    # batch-born nodes: not in the stored labels; their super-node is
-    # themselves, so `merged` already carries their final label
-    born = (
-        sup.join(labels, "node", "left_anti")
-        .join(
-            F.broadcast(
-                merged.select(
-                    F.col("node").alias("_sup"),
-                    F.col("cluster_id").alias("_new"),
-                )
-            ),
-            "_sup",
-            "left",
-        )
-        .select(
-            "node", F.coalesce("_new", F.col("_sup")).alias("cluster_id")
-        )
-    )
-    return relabeled.unionByName(born)
-
-
-def canonical_edges(
-    edges: DataFrame, a_col: str = "a", b_col: str = "b"
-) -> DataFrame:
-    """Canonicalize an undirected edge list: (a, b) with a < b,
-    self-loops dropped, duplicates collapsed — the stored form every
-    graph operator here consumes (triangle_count derives it inline;
-    triangle_count_incremental maintains it as the edge STORE across
-    batches, where the per-batch fold is an anti-join + append, never
-    a re-distinct over the whole graph)."""
-    return (
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def triangle_count(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    *,
-    assume_canonical: bool = False,
-) -> DataFrame:
-    """Per-node triangle participation counts over an undirected graph
-    — the local-clustering primitive beside `pagerank_quantized`
-    (centrality) and `connected_components` (reachability). Returns
-    (node, tri_cnt) for every node in at least one triangle.
-
-    Physical strategy is degree-ordered orientation (compact-forward /
-    the MapReduce node-iterator++): canonicalize and dedup the edge
-    list, then orient every edge from its (degree, id)-smaller endpoint
-    to the larger. Each node's OUT-degree is then O(sqrt(m)) no matter
-    how skewed the raw degree distribution is — a hub with 10M
-    followers contributes wedges bounded by the orientation, not
-    deg^2, which is the difference between an unrunnable join and a
-    routine one on a social graph at 100 TB. Wedges enumerate with ONE
-    equi-self-join of the oriented list on its source (residual
-    predicate orders the two out-neighbors so each wedge appears
-    once), closed by ONE equi-join back against the oriented list.
-    Every join is a hash/sort-merge equi-join on node keys — never a
-    cartesian — and the only other shuffles are the dedup and the
-    degree aggregate. Counting explodes each triangle into its three
-    corners and folds with a partial-aggregating groupBy.
-    """
-    # materialize the canonical edge list ONCE: the degree aggregate
-    # and the degree-attach joins both read it, and without the
-    # checkpoint each consumer re-runs the dedup shuffle from the
-    # source (measured: the full plan re-computed the oriented
-    # subtree 3x — 88 exchanges at sf0.001 vs 7 after).
-    # ``assume_canonical`` (r15): a caller holding an edge STORE that
-    # is already in canonical_edges form AND already materialized
-    # (triangle_count_incremental's contract — the composed
-    # graph_triangle_incremental entry checkpoints exactly that
-    # frame) skips the redundant re-distinct shuffle and the second
-    # checkpoint; the rename is a zero-cost projection over the
-    # caller's materialization. Correctness is the caller's assertion,
-    # same as the stored_edges guard in the incremental fold.
-    if assume_canonical:
-        canon = edges.select(
-            F.col(a_col).alias("_x"), F.col(b_col).alias("_y")
-        )
-    else:
-        canon = (
-            canonical_edges(edges, a_col, b_col)
-            .withColumnsRenamed({"a": "_x", "b": "_y"})
-            .localCheckpoint()
-        )
-    deg = (
-        canon.select(F.col("_x").alias("node"))
-        .union(canon.select(F.col("_y").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("_deg"))
-    )
-    with_deg = (
-        canon.join(deg.withColumnsRenamed({"node": "_x", "_deg": "_dx"}), "_x")
-        .join(deg.withColumnsRenamed({"node": "_y", "_deg": "_dy"}), "_y")
-    )
-    # orient low (degree, id) -> high; carry the dst's (degree, id) so
-    # the wedge self-join can order out-neighbors without a global rank
-    # (a row_number over all nodes would serialize on one partition)
-    x_first = (F.col("_dx") < F.col("_dy")) | (
-        (F.col("_dx") == F.col("_dy")) & (F.col("_x") < F.col("_y"))
-    )
-    # three consumers (both wedge sides + the closing join) read the
-    # oriented list — materialize it, don't re-derive it per consumer
-    oriented = with_deg.select(
-        F.when(x_first, F.col("_x")).otherwise(F.col("_y")).alias("src"),
-        F.when(x_first, F.col("_y")).otherwise(F.col("_x")).alias("dst"),
-        F.when(x_first, F.col("_dy")).otherwise(F.col("_dx")).alias("ddeg"),
-    ).localCheckpoint()
-    e1 = oriented.alias("e1")
-    e2 = oriented.alias("e2")
-    wedges = e1.join(
-        e2,
-        (F.col("e1.src") == F.col("e2.src"))
-        & (
-            (F.col("e1.ddeg") < F.col("e2.ddeg"))
-            | (
-                (F.col("e1.ddeg") == F.col("e2.ddeg"))
-                & (F.col("e1.dst") < F.col("e2.dst"))
-            )
-        ),
-    ).select(
-        F.col("e1.src").alias("_u"),
-        F.col("e1.dst").alias("_v"),
-        F.col("e2.dst").alias("_w"),
-    )
-    # the closing edge (v, w) is oriented exactly as the wedge ordered
-    # its out-neighbors — by (degree, id) — so one equi-join closes it
-    closing = oriented.select(
-        F.col("src").alias("_v"), F.col("dst").alias("_w")
-    )
-    tri = wedges.join(closing, ["_v", "_w"])
-    corners = (
-        tri.select(F.col("_u").alias("node"))
-        .union(tri.select(F.col("_v").alias("node")))
-        .union(tri.select(F.col("_w").alias("node")))
-    )
-    return corners.groupBy("node").agg(
-        F.count(F.lit(1)).alias("tri_cnt")
-    )
-
-
-def triangle_count_incremental(
-    stored_edges: DataFrame,
-    stored_counts: DataFrame,
-    new_edges: DataFrame,
-    new_a_col: str = "a",
-    new_b_col: str = "b",
-    *,
-    stored_degrees: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, DataFrame, DataFrame]:
-    """Fold a batch of NEW edges into stored per-node triangle counts
-    without re-solving the whole graph — the triangle analog of
-    `cc_incremental` (local clustering maintained per ingest cycle,
-    O(batch-touched), not O(graph)).
-
-    State is the pair a deployment stores anyway: the canonical edge
-    frame — ALWAYS ``canonical_edges`` form, column-named (a, b);
-    guarded below — and the (node, tri_cnt) counts from the last
-    fold. ``new_a_col``/``new_b_col`` name the RAW BATCH's endpoint
-    columns only (the batch is canonicalized here; the store already
-    is — review r14 renamed the params so the asymmetry is explicit). The batch canonicalizes
-    and anti-joins the store — replayed edges vanish, so at-least-once
-    delivery is absorbed — and every genuinely new triangle contains
-    1, 2, or 3 batch edges. The three cases PARTITION the new
-    triangles, and each case enumerates its triangles exactly once:
-
-    - ONE batch edge (u, v) + two stored edges: expand the O-adjacency
-      of the LOWER-(degree, id) endpoint (the edge-iterator bound —
-      work per edge is min(deg u, deg v), hub-proof the same way the
-      batch solve's orientation is) and close (other, w) against the
-      store. A closing edge still in the batch fails the store lookup,
-      so 2-batch-edge triangles are excluded here, not double-counted.
-    - TWO batch edges (x,u), (x,v) + the stored edge (u, v): a batch
-      wedge centered on the shared endpoint, out-pair ordered u < v so
-      each wedge enumerates once; the center is unique because the
-      third edge being STORED means no other pair of the triangle's
-      edges can both be batch edges.
-    - THREE batch edges: the canonical a < b < c enumeration over the
-      batch alone (batch-sized, the oracle's own form — orientation
-      would be overkill at batch scale).
-
-    Count deltas are the corner-exploded union of the three cases;
-    the updated counts coalesce-add onto the store (nodes keep the
-    `triangle_count` contract: present iff tri_cnt > 0 — deltas are
-    non-negative because edges are only ever added). Returns
-    (updated_edges, updated_counts); equality with the from-scratch
-    solve over old ∪ new edges is pinned by test, property fuzz,
-    soak, and the registry oracle.
-
-    Degree state (round 15, VERDICT r14 item 5): pass
-    ``stored_degrees`` — a (node, degree) frame equal to the degree
-    aggregate over ``stored_edges`` — and the fold SKIPS the one
-    O(graph) term it otherwise pays (the anchor-choice degree
-    recompute: a union + groupBy shuffle over every stored edge) and
-    returns a THREE-tuple (updated_edges, updated_counts,
-    updated_degrees), where updated_degrees is the same coalesce-add
-    fold as the counts (+1 per batch-edge endpoint — node-count-sized
-    state, never an edge scan) so the next fold can thread it back
-    in. Anchor choice reads the SAME (degree, id) key either way, so
-    the two paths are bit-equal — pinned by test and property fuzz.
-    Without ``stored_degrees`` the fold recomputes the table from the
-    store scan and returns the two-tuple as before; at eval scale the
-    recompute is one column-pruned pass and the saving is noise
-    (SCALE.md records the sf0.1 measurement), but at 100 TB the
-    recompute is the difference between O(batch + Σ min-degree) and
-    an O(graph) shuffle per ingest cycle.
-    """
-    if not {"a", "b"}.issubset(stored_edges.columns):
-        raise ValueError(
-            "triangle_count_incremental: stored_edges must be in "
-            "canonical_edges form with columns (a, b); got "
-            f"{stored_edges.columns}"
-        )
-    # fail fast (like the stored_edges guard above): the batch
-    # localCheckpoint below is an eager full-store anti-join job
-    if stored_degrees is not None and not {"node", "degree"}.issubset(
-        stored_degrees.columns
-    ):
-        raise ValueError(
-            "triangle_count_incremental: stored_degrees must have "
-            f"columns (node, degree); got {stored_degrees.columns}"
-        )
-    o = stored_edges.select(F.col("a"), F.col("b"))
-    batch = (
-        canonical_edges(new_edges, new_a_col, new_b_col)
-        .join(o, ["a", "b"], "left_anti")
-        .localCheckpoint()  # read by all three cases + the append
-    )
-    adj_o = o.select(F.col("a").alias("node"), F.col("b").alias("nb")).union(
-        o.select(F.col("b").alias("node"), F.col("a").alias("nb"))
-    )
-    if stored_degrees is not None:
-        deg = stored_degrees.select(
-            "node", F.col("degree").alias("_deg")
-        )
-    else:
-        deg = adj_o.groupBy("node").agg(F.count(F.lit(1)).alias("_deg"))
-
-    # --- case 1: one batch edge, two stored edges ------------------------
-    with_deg = (
-        batch.join(
-            deg.withColumnsRenamed({"node": "a", "_deg": "_da"}), "a", "left"
-        )
-        .join(
-            deg.withColumnsRenamed({"node": "b", "_deg": "_db"}), "b", "left"
-        )
-        .select(
-            "a",
-            "b",
-            F.coalesce("_da", F.lit(0)).alias("_da"),  # unseen node: deg 0
-            F.coalesce("_db", F.lit(0)).alias("_db"),
-        )
-    )
-    a_anchor = (F.col("_da") < F.col("_db")) | (
-        (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
-    )
-    anchored = with_deg.select(
-        F.when(a_anchor, F.col("a")).otherwise(F.col("b")).alias("_anchor"),
-        F.when(a_anchor, F.col("b")).otherwise(F.col("a")).alias("_other"),
-        "a",
-        "b",
-    )
-    cand1 = (
-        anchored.join(
-            adj_o.withColumnsRenamed({"node": "_anchor", "nb": "_w"}),
-            "_anchor",
-        )
-        .filter(F.col("_w") != F.col("_other"))
-    )
-    tri1 = cand1.join(
-        o.withColumnsRenamed({"a": "_ca", "b": "_cb"}),
-        (F.least("_other", "_w") == F.col("_ca"))
-        & (F.greatest("_other", "_w") == F.col("_cb")),
-        "left_semi",
-    ).select("a", "b", F.col("_w").alias("c"))
-
-    # --- case 2: two batch edges + one stored closing edge --------------
-    adj_b = batch.select(
-        F.col("a").alias("_x"), F.col("b").alias("_n")
-    ).union(batch.select(F.col("b").alias("_x"), F.col("a").alias("_n")))
-    b1 = adj_b.withColumnsRenamed({"_n": "_u"})
-    b2 = adj_b.withColumnsRenamed({"_n": "_v"})
-    wedges_b = b1.join(b2, "_x").filter(F.col("_u") < F.col("_v"))
-    tri2 = wedges_b.join(
-        o.withColumnsRenamed({"a": "_u", "b": "_v"}),
-        ["_u", "_v"],
-        "left_semi",
-    ).select(F.col("_x").alias("a"), F.col("_u").alias("b"), F.col("_v").alias("c"))
-
-    # --- case 3: all three edges in the batch ----------------------------
-    e1 = batch.withColumnsRenamed({"a": "_ta", "b": "_tb"})
-    e2 = batch.withColumnsRenamed({"a": "_tb", "b": "_tc"})
-    e3 = batch.withColumnsRenamed({"a": "_ta", "b": "_tc"})
-    tri3 = (
-        e1.join(e2, "_tb")
-        .join(e3, ["_ta", "_tc"], "left_semi")
-        .select(
-            F.col("_ta").alias("a"),
-            F.col("_tb").alias("b"),
-            F.col("_tc").alias("c"),
-        )
-    )
-
-    new_tris = tri1.unionByName(tri2).unionByName(tri3)
-    delta = (
-        new_tris.select(F.col("a").alias("node"))
-        .union(new_tris.select(F.col("b").alias("node")))
-        .union(new_tris.select(F.col("c").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("_delta"))
-    )
-    updated_counts = (
-        stored_counts.join(delta, "node", "full_outer")
-        .select(
-            "node",
-            (
-                F.coalesce("tri_cnt", F.lit(0))
-                + F.coalesce("_delta", F.lit(0))
-            ).alias("tri_cnt"),
-        )
-        .filter(F.col("tri_cnt") > 0)
-    )
-    updated_edges = o.unionByName(batch)
-    if stored_degrees is None:
-        return updated_edges, updated_counts
-    # degree fold: +1 per batch-edge endpoint, node-count-sized —
-    # the same coalesce-add shape as the counts fold above (degrees
-    # never filter to >0: an isolated node can't exist here because
-    # every row of the degree frame came from an edge endpoint)
-    batch_deg = (
-        batch.select(F.col("a").alias("node"))
-        .union(batch.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("_bd"))
-    )
-    updated_degrees = stored_degrees.join(
-        batch_deg, "node", "full_outer"
-    ).select(
-        "node",
-        (
-            F.coalesce("degree", F.lit(0)) + F.coalesce("_bd", F.lit(0))
-        ).alias("degree"),
-    )
-    return updated_edges, updated_counts, updated_degrees
 
 
 def pack_next_fit(

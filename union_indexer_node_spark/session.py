@@ -7,9 +7,10 @@ anything via the ``extra`` dict.
 
 from __future__ import annotations
 
+import logging
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULTS = {
     # AQE: runtime coalescing + skew-join splitting. Hot communities /
@@ -97,3 +98,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def free_local_checkpoint(df: DataFrame) -> None:
+    """Release a consumed localCheckpoint's storage blocks NOW.
+    ``Dataset.unpersist`` does not cover checkpoint storage, and the
+    async ContextCleaner only reclaims it once the JVM-side RDD becomes
+    weakly reachable — in an iterative loop that lag accumulates one
+    corpus-scale copy per iteration. The checkpointed frame's analyzed
+    plan is a LogicalRDD whose ``rdd`` is exactly the persisted one;
+    unpersisting it is targeted (never touches other caches). The frame
+    MUST NOT be read again afterwards — its data is gone, not
+    recomputable. Best-effort: internal accessors (absent under Spark
+    Connect, brittle across internal-API changes), so failures degrade
+    to the ContextCleaner path rather than raising — but LOUDLY: a
+    silent no-op here reinstates exactly the per-iteration
+    corpus-scale storage accumulation this function exists to prevent,
+    so the fallback logs a warning the first time it happens (once per
+    process, not per iteration — iterative callers would spam)."""
+    global _FREE_CKPT_WARNED
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception as exc:
+        if not _FREE_CKPT_WARNED:
+            _FREE_CKPT_WARNED = True
+            logging.getLogger(__name__).warning(
+                "free_local_checkpoint: eager checkpoint-storage release "
+                "unavailable (%s: %s); falling back to ContextCleaner-paced "
+                "reclamation — iterative loops may accumulate one "
+                "corpus-scale storage copy per iteration until GC",
+                type(exc).__name__,
+                exc,
+            )
+
+
+_FREE_CKPT_WARNED = False

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.posts import apply_first_upload, build_posts
-from ..pipelines.similarity import _free_local_checkpoint
+from ..session import free_local_checkpoint
 from ..sources.sinks import overwrite_partitions, upsert, write_snapshot
 
 
@@ -96,8 +96,8 @@ def _fold_stream(
                         os.path.join(state_dir, f"{partition_col}={p}"),
                         ignore_errors=True,
                     )
-            _free_local_checkpoint(merged)
-        _free_local_checkpoint(new)
+            free_local_checkpoint(merged)
+        free_local_checkpoint(new)
 
     return (
         ops_stream.writeStream.foreachBatch(process_batch)
