@@ -599,3 +599,105 @@ def test_round11_new_entry_plan_shapes(spark):
     assert "LeftAnti" not in maximal
     assert maximal.count("Generate") <= 2
     assert "CartesianProduct" not in maximal
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _tokenizer_copies(spark, monkeypatch, build) -> int:
+    """``split(`` occurrences over every plan an operator runs: its
+    optimized plan plus each frame it materializes while it is built (a
+    checkpoint or a bounded collect), which the final plan only sees as
+    a scan of stored rows."""
+    frame_cls = type(spark.range(1))
+    seen = []
+    with monkeypatch.context() as m:
+        for name in ("localCheckpoint", "collect"):
+            real = getattr(frame_cls, name)
+
+            def hooked(self, *a, _real=real, **kw):
+                seen.append(_optimized(self))
+                return _real(self, *a, **kw)
+
+            m.setattr(frame_cls, name, hooked)
+        seen.append(_optimized(build()))
+    return sum(p.count("split(") for p in seen)
+
+
+@pytest.mark.parametrize(
+    "op, inputs",
+    [("minhash_signature", 1), ("_canonical_signature", 1),
+     ("jaccard_pairs", 2), ("jaccard_pairs_prune_self", 1),
+     ("bloom_decontaminate", 2), ("decontaminate", 2),
+     ("contamination_report", 2)],
+)
+def test_tokenizer_evaluated_once_per_input(spark, monkeypatch, op, inputs):
+    """Each curate operator plans one tokenizer per input frame: the
+    shingle lambda reads the token projection, and no projection collapse
+    copies ``split`` into every ``element_at`` of it."""
+    from union_indexer_node_spark import tables
+    from union_indexer_node_spark.pipelines import dedup, training
+
+    docs = tables.load(spark, SF_DIR, "documents")
+    d, b = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
+    pairs = spark.createDataFrame([(2, 4), (4, 6)], "a long, b long")
+    build = {
+        "minhash_signature": lambda: dedup.minhash_signature(d, "text", "doc_id"),
+        "_canonical_signature": lambda: dedup._canonical_signature(d, "text", "doc_id"),
+        "jaccard_pairs": lambda: dedup.jaccard_pairs(d, b, pairs, "text", "doc_id"),
+        "jaccard_pairs_prune_self": lambda: dedup.jaccard_pairs(
+            d, d, pairs, "text", "doc_id", prune=True),
+        "bloom_decontaminate": lambda: training.bloom_decontaminate(d, b, "text", "doc_id"),
+        "decontaminate": lambda: training.decontaminate(d, b, "text", "doc_id"),
+        "contamination_report": lambda: training.contamination_report(
+            d, b, "text", "doc_id", "source"),
+    }[op]
+    assert _tokenizer_copies(spark, monkeypatch, build) == inputs
+
+
+def test_shingle_array_read_alone_by_explode_collapses(spark):
+    """Control for the rule the operators above follow (explode the
+    shingles straight from the token projection): a shingle array
+    materialized in its own Project and read only by ``explode`` is
+    inlined into the generator, and with it the tokenizer into every
+    ``element_at`` of the shingle lambda."""
+    from union_indexer_node_spark import tables
+    from union_indexer_node_spark.pipelines.dedup import (
+        shingles_from_tokens,
+        tokens,
+    )
+
+    docs = tables.load(spark, SF_DIR, "documents")
+    toks = docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
+    straight = toks.select(
+        "doc_id", F.explode(shingles_from_tokens(F.col("_toks"), 3))
+    )
+    staged = toks.select(
+        "doc_id", shingles_from_tokens(F.col("_toks"), 3).alias("_grams")
+    ).select("doc_id", F.explode("_grams"))
+    assert _optimized(straight).count("split(") == 1
+    assert _optimized(staged).count("split(") > 1
+
+
+def test_text_measures_plan_no_per_token_lambdas(spark):
+    """Tokens, the quality features and BM25 term frequencies are
+    built-in array and regexp expressions (codegen'd); the Gopher gate
+    keeps only its per-line ellipsis lambda."""
+    from union_indexer_node_spark import tables
+    from union_indexer_node_spark.operators import feeds
+    from union_indexer_node_spark.pipelines import dedup, textstats
+
+    docs = tables.load(spark, SF_DIR, "documents")
+    lambdas = {
+        "tokens": docs.select(dedup.tokens(F.col("text"))),
+        "quality_features": textstats.quality_features(docs, "text", "doc_id"),
+        "bm25": feeds.search_feed(
+            tables.posts(spark, SF_DIR), "spark data", feeds.FeedSpec(limit=5),
+            rank_by="bm25",
+        ),
+    }
+    for name, df in lambdas.items():
+        assert "lambdafunction(" not in _optimized(df), name
+    gate = textstats.gopher_quality_gate(docs, "text", "doc_id")
+    assert _optimized(gate).count("lambdafunction(") <= 4

@@ -866,6 +866,69 @@ def test_ivfpq_probes_only_nearest_cells(spark):
     assert {r["vec_id"] for r in rows2} == {1, 2, 3}
 
 
+# Java's \s without UNICODE_CHARACTER_CLASS: the class every whitespace
+# rule below splits on
+_JAVA_WS = "[ \t\n\x0b\f\r]"
+
+
+def _edge_corpus(n: int = 2000, seed: int = 9) -> list:
+    """Seeded fuzz texts over what the text rules treat specially: tabs,
+    \\x0b, \\r\\n, space-only lines, '-'/'*'/'•' bullets, '...', '#',
+    'İ'/'é', plus one empty and one NULL text. No Unicode line terminator
+    other than '\\r' and '\\n' occurs (Java's '$' also stops before a
+    final U+0085/U+2028/U+2029, which the references below ignore)."""
+    import random
+
+    rng = random.Random(seed)
+    words = ["the", "THE", "and", "of", "to", "be", "that", "have", "with",
+             "Hello", "x1", "12345", "İstanbul", "café", "ÉTÉ", "#tag", "##",
+             "...", "end...", "-", "*", "•", "-x", "*b", "•c", "a-b", "u.s.",
+             "!?", "'s"]
+    seps = [" ", " ", " ", "  ", "\t", "\x0b", "\f", "\n", "\r\n",
+            "\n   \n", "\n  ", "\n- ", "\n* ", "\n• ", "\n  - ", "...\n",
+            " ...  \n", "\n\n"]
+    rows = [(0, ""), (1, None)]
+    for i in range(2, n):
+        parts = [rng.choice(seps)] if rng.random() < 0.3 else []
+        for _ in range(rng.randint(0, 40)):
+            parts += [rng.choice(words), rng.choice(seps)]
+        rows.append((i, "".join(parts)))
+    return rows
+
+
+def _ref_gopher(text) -> dict:
+    """The seven Gopher measurements, stated per word and per line."""
+    import re
+
+    t = text or ""
+    words = [w for w in re.split(_JAVA_WS + "+", t) if w]
+    nw = len(words)
+    lines = [x for x in t.split("\n") if x.lstrip(" ")]
+    nl = len(lines)
+
+    def per(k, n, scale):
+        return k * scale // n if n else 0
+
+    return {
+        "n_words": nw,
+        "mean_word_len_x100": per(sum(len(w) for w in words), nw, 100),
+        "symbol_to_word_x1000": per(t.count("#") + t.count("..."), nw, 1000),
+        "alpha_word_x1000": per(
+            sum(bool(re.search("[A-Za-z]", w)) for w in words), nw, 1000
+        ),
+        "n_stop_hits": len({w.lower() for w in words} & {
+            "the", "be", "to", "of", "and", "that", "have", "with"}),
+        "bullet_line_x1000": per(
+            sum(x.lstrip(" ")[0] in "-*•" for x in lines), nl, 1000
+        ),
+        "ellipsis_line_x1000": per(
+            sum(bool(re.search(r"\.\.\." + _JAVA_WS + r"*\Z", x))
+                for x in lines),
+            nl, 1000,
+        ),
+    }
+
+
 def test_gopher_gate_rules_fire_individually(spark):
     from union_indexer_node_spark.pipelines.textstats import (
         gopher_quality_gate,
@@ -877,6 +940,7 @@ def test_gopher_gate_rules_fire_individually(spark):
             "keep writing more and more plain prose until fifty words "
             "of normal english text have accumulated in this document "
             "right about now done")
+    edge = {i + 100: text for i, text in _edge_corpus()}
     docs = spark.createDataFrame(
         [
             (1, good),                                   # passes
@@ -885,6 +949,7 @@ def test_gopher_gate_rules_fire_individually(spark):
             (4, " ".join(["12345"] * 60)),               # rules 4+5 (+2)
             (5, "\n".join(["- b"] * 10)),                # rule 6 bullets
             (6, None),                                   # null -> rule 1
+            *edge.items(),                               # measured below
         ],
         "doc_id long, text string",
     )
@@ -896,6 +961,50 @@ def test_gopher_gate_rules_fire_individually(spark):
     assert out[4]["fail_mask"] & 8 and out[4]["fail_mask"] & 16
     assert out[5]["fail_mask"] & 32
     assert out[6]["fail_mask"] & 1 and out[6]["n_words"] == 0
+    for i, text in edge.items():
+        want = _ref_gopher(text)
+        assert {k: out[i][k] for k in want} == want, repr(text)
+
+
+def test_tokens_and_quality_features_match_reference_on_edge_inputs(spark):
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from union_indexer_node_spark.pipelines.dedup import tokens
+    from union_indexer_node_spark.pipelines.textstats import (
+        LANG_PROFILES,
+        quality_features,
+    )
+
+    def round6(x):
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    def ref(text):
+        if text is None:  # size/length of NULL are NULL; least() skips them
+            return None, (None, None, 0.0, 0.0, 0.0, 0.7)
+        toks = [w for w in re.split("[^a-z0-9]+", text.lower()) if w]
+        n, n_chars = len(toks), len(text)
+        n_punct = len(re.findall(r"[^\w\s]", text, flags=re.ASCII))
+        stop = len(set(toks) & set(LANG_PROFILES["en"])) / n if n else 0.0
+        punct = n_punct / n_chars if n_chars else 0.0
+        avg = sum(map(len, toks)) / n if n else 0.0
+        score = min(n / 100, 1.0) * 0.5 + stop * 0.3 + (1 - punct) * 0.2
+        return toks, (n, n_chars, *map(round6, (avg, stop, punct, score)))
+
+    docs = spark.createDataFrame(_edge_corpus(), "doc_id long, text string")
+    texts = dict(_edge_corpus())
+    got_toks = {
+        r["doc_id"]: r["t"]
+        for r in docs.select("doc_id", tokens(F.col("text")).alias("t")).collect()
+    }
+    got_q = {
+        r["doc_id"]: tuple(r)[1:]
+        for r in quality_features(docs, "text", "doc_id").collect()
+    }
+    for i, text in texts.items():
+        toks, q = ref(text)
+        assert got_toks[i] == toks, repr(text)
+        assert got_q[i] == q, repr(text)
 
 
 def test_ccnet_buckets_fractions_and_ordering(spark):

@@ -635,6 +635,54 @@ def test_streaming_reply_under_snapshot_parent_is_allowed(spark, tmp_path):
     assert replayed == {k: streamed[k] for k in replayed}
 
 
+def test_streaming_one_write_folds_as_one_batch(spark, tmp_path):
+    """The part files of one landed write fold in one micro-batch, so a
+    reply written together with its parent is allowed as in the one-shot
+    build even when its part file is older (a trigger cap would take the
+    files in modification order: the child first, alone)."""
+    import glob
+
+    from union_indexer_node_spark.ingest.posts import build_posts
+    from union_indexer_node_spark.streaming.stream import (
+        ops_file_stream,
+        start_posts_stream,
+    )
+
+    delta_dir = tmp_path / "ops" / "d0"
+    delta_dir.mkdir(parents=True)
+    parents = [
+        comment(10, "alice", "root", "root body"),
+        comment(11, "bob", "r1", "reply one", parent=("alice", "root")),
+    ]
+    children = [comment(12, "dave", "r3", "deep", parent=("bob", "r1"))]
+    now = dt.datetime.now().timestamp()
+    # the child's part file is written second but stamped earlier
+    for i, (rows, mtime) in enumerate(((parents, now), (children, now - 60))):
+        out = str(tmp_path / f"w{i}")
+        spark.createDataFrame(rows, schema=OPS_SCHEMA).coalesce(1).write.parquet(out)
+        (part,) = glob.glob(out + "/part-*.parquet")
+        dest = str(delta_dir / f"part-{i:05d}.parquet")
+        shutil.move(part, dest)
+        os.utime(dest, (mtime, mtime))
+
+    state_dir = str(tmp_path / "posts_state")
+    start_posts_stream(
+        spark,
+        ops_file_stream(spark, str(tmp_path / "ops"), OPS_SCHEMA),
+        state_dir,
+        str(tmp_path / "ckpt"),
+    ).awaitTermination(120)
+
+    def allowed(df):
+        return {(r.author, r.permlink): r.allowed_by_parent for r in df.collect()}
+
+    one_shot = allowed(
+        build_posts(spark.createDataFrame(parents + children, schema=OPS_SCHEMA))
+    )
+    assert one_shot[("dave", "r3")] is True
+    assert allowed(spark.read.parquet(state_dir)) == one_shot
+
+
 def test_stream_exact_dedup_null_texts_pass_through(spark, tmp_path):
     """Distinct NULL-text docs must NOT collapse into one (md5(NULL) is
     NULL and null keys would compare equal in the dedup state)."""

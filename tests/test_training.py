@@ -166,6 +166,41 @@ def test_decontaminate_counts_overlap(spark):
     assert got[3]["n_grams"] == 0 and got[3]["contamination"] == 0.0
 
 
+def test_bloom_decontaminate_leaves_no_state_and_builds_lazily(spark, monkeypatch):
+    """Building and writing bloom_decontaminate persists no RDD, and the
+    only jobs its construction starts are the bounded bit-word collect's."""
+    from union_indexer_node_spark.pipelines.training import bloom_decontaminate
+
+    d = spark.read.parquet(f"{SF_ORACLE_DIR}/documents.parquet")
+    bench = d.filter(F.col("doc_id") % 19 == 0)
+    train = d.filter(F.col("doc_id") % 19 != 0)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def n_jobs():  # job ids are sequential; the tracker keeps the newest
+        return max(tracker.getJobIdsForGroup(None) or [-1]) + 1
+
+    frame_cls = type(d)
+    real_collect = frame_cls.collect
+    collect_jobs = []
+
+    def collect(self):
+        before = n_jobs()
+        rows = real_collect(self)
+        collect_jobs.append(n_jobs() - before)
+        return rows
+
+    persistent = sc._jsc.sc().getPersistentRDDs().size()
+    before = n_jobs()
+    with monkeypatch.context() as m:
+        m.setattr(frame_cls, "collect", collect)
+        out = bloom_decontaminate(train, bench, "text", "doc_id")
+    assert len(collect_jobs) == 1
+    assert n_jobs() - before == collect_jobs[0]
+    out.write.mode("overwrite").format("noop").save()
+    assert sc._jsc.sc().getPersistentRDDs().size() == persistent
+
+
 def test_decontaminate_broadcasts_benchmark_side(spark):
     d = spark.read.parquet(f"{SF_ORACLE_DIR}/documents.parquet")
     bench = d.filter(F.col("doc_id") % 19 == 0)

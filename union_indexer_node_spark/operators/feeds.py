@@ -255,7 +255,7 @@ def search_feed(
         dfs = [f"_df{i}" for i in range(len(qterms))]
 
         def term_freq(t: str) -> Column:
-            return F.size(F.filter(toks, lambda x: x == F.lit(t)))
+            return F.size(toks) - F.size(F.array_remove(toks, t))
 
         rows = df.select(
             "*",

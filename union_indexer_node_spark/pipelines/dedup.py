@@ -34,10 +34,10 @@ from pyspark.sql import functions as F
 
 def tokens(text: Column) -> Column:
     """Lower-cased word tokens, empties removed (shared tokenizer —
-    keep in lockstep with oracle regexp_split_to_array)."""
-    return F.filter(
-        F.split(F.lower(text), "[^a-z0-9]+"), lambda x: x != F.lit("")
-    )
+    keep in lockstep with oracle regexp_split_to_array). Built-ins
+    only: an ``array_remove`` codegens, where a ``filter`` lambda runs
+    interpreted per token."""
+    return F.array_remove(F.split(F.lower(text), "[^a-z0-9]+"), "")
 
 
 def token_count(text: Column) -> Column:
@@ -84,11 +84,14 @@ def md5_bucket(col: Column, n_buckets: int) -> Column:
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles from a pre-computed token array.
 
-    Callers must materialize the token array in a prior projection:
-    inlining ``tokens(text)`` here makes Catalyst re-evaluate the
-    split/lower tokenizer inside every element_at of the lambda —
-    O(tokens·n) tokenizer runs per document (observed 3-4× wall-clock
-    on the LSH pipeline).
+    Callers project the token array first and read the shingles in the
+    NEXT projection: the shingle array itself, or ``explode``/``size``
+    over it. That plans one tokenizer per row (Spark 4.1), with no
+    collapse barrier. Inlining ``tokens(text)`` here, or materializing
+    the shingle array in a Project that only an ``explode`` reads,
+    lets Catalyst copy the split/lower tokenizer into every element_at
+    of the lambda — O(tokens·n) tokenizer runs per document (pinned by
+    test_shingle_array_read_alone_by_explode_collapses).
 
     Guarded for <n-token docs INSIDE the expression: Spark's
     sequence(1, 0) is the DESCENDING [1, 0], whose element_at(toks, 0)
@@ -210,32 +213,32 @@ def _canonical_signature(
     shuffling text bytes — row-for-row equal to
     ``minhash_signature(_digest_canonicals(df), ...)`` (pinned by
     TestCanonicalSignatureParity) but shaped for scale (guide §2.3):
-    shingles explode MAP-SIDE keyed by md5(text), the per-window min
-    aggregates absorb duplicate texts for free (identical text →
-    identical digest and shingle set → the same mins re-contributed,
-    and min is idempotent), and the min-id representative attaches by
-    a digest-keyed join of two digest-count-sized frames.
-    _digest_canonicals' min_by(struct(id, text)) instead shipped every
-    distinct text's BYTES through the digest exchange. The trade,
+    shingles explode MAP-SIDE keyed by md5(text) with the id carried
+    along, and ONE digest-keyed aggregate takes both the per-window
+    mins and the min-id representative. Identical texts have identical
+    digests and shingle sets, so duplicates only re-contribute the same
+    mins (min is idempotent), and a doc with no shingles (short, empty
+    or NULL text) has no row here, exactly as in the canonicals path.
+    One scan, one md5(text) per doc, one shuffle, no join. The trade,
     explicit: a duplicate text is re-tokenized/re-shingled map-side
     rather than skipped — CPU for network, the right direction for a
-    dup-heavy corpus at 100 TB (and measured 1.42 → 1.35 s at sf0.1
-    even at this testdata's ~0 % dup rate)."""
-    dg = F.md5(F.col(text_col)).alias("_dg")
+    dup-heavy corpus at 100 TB."""
     sh = (
-        df.select(dg, tokens(F.col(text_col)).alias("_toks"))
+        df.select(
+            F.md5(F.col(text_col)).alias("_dg"),
+            F.col(id_col),
+            tokens(F.col(text_col)).alias("_toks"),
+        )
         .select(
             "_dg",
+            id_col,
             F.explode(shingles_from_tokens(F.col("_toks"), shingle_n)).alias("s"),
         )
     )
-    hashed = sh.select("_dg", _hash_windows_hexcat("s", k).alias("_hx"))
-    sig = hashed.groupBy("_dg").agg(*_window_min_aggs(k))
-    reps = df.groupBy(dg).agg(F.min(F.col(id_col)).alias(id_col))
-    # inner join: a doc with no shingles (short/empty/NULL text) has no
-    # signature row in either path, so its reps row dropping here
-    # matches minhash_signature-over-canonicals exactly
-    return sig.join(reps, "_dg").select(id_col, *[f"h{j}" for j in range(k)])
+    hashed = sh.select("_dg", id_col, _hash_windows_hexcat("s", k).alias("_hx"))
+    return hashed.groupBy("_dg").agg(
+        F.min(id_col).alias(id_col), *_window_min_aggs(k)
+    ).drop("_dg")
 
 
 def lsh_bands(sig: DataFrame, id_col: str, *, bands: int, rows: int) -> DataFrame:

@@ -38,13 +38,7 @@ def quality_features(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     n_stop = F.size(F.array_intersect(F.array_distinct(toks), en_stop))
     n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
     avg_tok_len = F.when(
-        n_tok > 0,
-        F.aggregate(
-            F.transform(toks, lambda x: F.length(x).cast("double")),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        / n_tok,
+        n_tok > 0, F.length(F.array_join(toks, "")).cast("double") / n_tok
     ).otherwise(F.lit(0.0))
     stop_ratio = F.when(n_tok > 0, n_stop.cast("double") / n_tok).otherwise(0.0)
     punct_ratio = F.when(n_chars > 0, n_punct.cast("double") / n_chars).otherwise(0.0)
@@ -111,11 +105,15 @@ def gopher_quality_gate(
         return ((a - a % b) / b).cast("long")
 
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(t, r"\s+"), lambda x: x != F.lit(""))
-    nw = F.size(words).cast("long")
-    sum_len = F.aggregate(
-        words, F.lit(0).cast("long"), lambda a, x: a + F.length(x)
-    )
+    # Measured over the whole text with built-ins (codegen'd, no per-word
+    # lambda): words are the maximal runs of non-\s characters, so
+    # their summed length is the text's non-\s character count and a
+    # word with a letter is one \S*[A-Za-z]\S* match. Lines split on
+    # '\n' only ((?d) makes '\n' the one line terminator for ^), and a
+    # line counts when it holds a non-space after its leading spaces
+    # (the rule's ``ltrim`` strips spaces only).
+    nw = F.size(F.array_remove(F.split(t, r"\s+"), "")).cast("long")
+    sum_len = F.length(F.regexp_replace(t, r"\s", "")).cast("long")
     mwl_x100 = F.when(nw > 0, _idiv(sum_len * 100, nw)).otherwise(
         F.lit(0)
     ).cast("long")
@@ -127,21 +125,19 @@ def gopher_quality_gate(
     sym_x1000 = F.when(nw > 0, _idiv(n_sym * 1000, nw)).otherwise(
         F.lit(0)
     ).cast("long")
-    n_alpha = F.size(
-        F.filter(words, lambda x: x.rlike("[A-Za-z]"))
-    ).cast("long")
+    n_alpha = F.regexp_count(t, F.lit(r"\S*[A-Za-z]\S*")).cast("long")
     alpha_x1000 = F.when(nw > 0, _idiv(n_alpha * 1000, nw)).otherwise(
         F.lit(0)
     ).cast("long")
     stop_lit = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    lw = F.transform(words, lambda x: F.lower(x))
-    n_stop = F.size(F.array_intersect(F.array_distinct(lw), stop_lit))
-    lines = F.filter(F.split(t, "\n"), lambda x: F.ltrim(x) != F.lit(""))
-    nl = F.size(lines)
-    n_bullet = F.size(
-        F.filter(lines, lambda x: F.ltrim(x).rlike("^[-*•]"))
+    n_stop = F.size(F.array_intersect(F.split(F.lower(t), r"\s+"), stop_lit))
+    nl = F.regexp_count(t, F.lit("(?md)^ *[^ \n]"))
+    n_bullet = F.regexp_count(t, F.lit("(?md)^ *[-*•]"))
+    # the ellipsis rule keeps its per-line lambda: in the multiline
+    # form \s* would run past the line's '\n' into the next line
+    n_ell_line = F.size(
+        F.filter(F.split(t, "\n"), lambda x: x.rlike(r"\.\.\.\s*$"))
     )
-    n_ell_line = F.size(F.filter(lines, lambda x: x.rlike(r"\.\.\.\s*$")))
     bullet_x1000 = F.when(
         nl > 0, _idiv(n_bullet.cast("long") * 1000, nl.cast("long"))
     ).otherwise(F.lit(0)).cast("long")

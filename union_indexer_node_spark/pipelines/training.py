@@ -60,24 +60,19 @@ def decontaminate(
     n_hit / n_grams (0.0 for docs with no grams). Callers drop or flag
     rows above their threshold; returning stats instead of filtering
     keeps one scan reusable for both reporting and gating.
+
+    Lazy: construction starts no job. Each side reads its shingles in
+    the projection after its tokens (``shingles_from_tokens``), so the
+    plan holds one tokenizer per input without a collapse barrier.
     """
-    # localCheckpoint = Catalyst collapse barrier: without it the
-    # optimizer inlines the split/lower/filter tokenizer into every
-    # element_at of the shingle lambda — O(grams*n) regexp runs per
-    # doc (measured 2.1x at sf0.1).
-    bench_toks = bench.select(
-        tokens(F.col(text_col)).alias("_toks")
-    ).localCheckpoint()
     bench_grams = (
-        bench_toks.select(
-            F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g")
-        )
+        bench.select(tokens(F.col(text_col)).alias("_toks"))
+        .select(F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g"))
         .select(F.md5("_g").alias("_gh"))
         .distinct()
     )
     grams = (
         train.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .localCheckpoint()
         .select(F.col(id_col), shingles_from_tokens(F.col("_toks"), n).alias("_grams"))
     )
     exploded = grams.select(
@@ -134,8 +129,9 @@ def contamination_report(
     Plan shape: benchmark grams are (benchmark, gram-hash) distinct —
     benchmark-corpus-sized, BROADCAST to the probe; training grams
     explode once, dedupe per (doc, gram), and the only wide operation
-    is the final groupBy(benchmark) over hit rows. Same collapse-
-    barrier checkpoints as ``decontaminate``.
+    is the final groupBy(benchmark) over hit rows. Both sides explode
+    the shingles straight from the token projection, which plans one
+    tokenizer per row without a collapse barrier.
 
     Returns (benchmark, n_bench_grams, n_docs_hit, n_gram_hits).
     """
@@ -144,7 +140,6 @@ def contamination_report(
             F.col(bench_col).alias("benchmark"),
             tokens(F.col(text_col)).alias("_toks"),
         )
-        .localCheckpoint()
         .select(
             "benchmark",
             F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g"),
@@ -158,7 +153,6 @@ def contamination_report(
     )
     tgrams = (
         train.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .localCheckpoint()
         .select(
             F.col(id_col),
             F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g"),
@@ -232,26 +226,20 @@ def bloom_decontaminate(
     (The first cut exploded k position rows per gram, broadcast-joined
     the set-bit table, and re-grouped on (doc, gram) to AND the bits —
     a corpus×k string-keyed shuffle, plus it tripped Catalyst's
-    projection collapse, which inlined the split/lower/filter
-    tokenizer into every element_at of the shingle lambda: 46 s at
-    sf0.1 vs 0.6 s for this form. The localCheckpoint below is that
-    collapse barrier — same fix, same rationale as
-    dedup.remove_repeated_passages.)
+    projection collapse, which inlined the tokenizer into every
+    element_at of the shingle lambda: 46 s at sf0.1 vs 0.6 s for this
+    form.) Both sides explode the shingles straight from the token
+    projection, which plans one tokenizer per row, so no collapse
+    barrier is needed: construction runs only the bounded collect and
+    persists nothing.
 
     Returns (id, n_grams, n_maybe_hit, contaminated).
     """
-    # Collapse barrier: materialize (id, tokens) so Catalyst cannot
-    # inline the tokenizer into every element_at of the shingle
-    # transform (O(grams*n) regexp runs per doc otherwise — measured
-    # 30x on this operator at sf0.1).
-    bench_toks = bench.select(
-        tokens(F.col(text_col)).alias("_toks")
-    ).localCheckpoint()
     # No distinct() anywhere on the build side: bit_or is idempotent,
     # so duplicate grams/positions cost nothing — the groupBy(word)
     # partial-aggregates each task down to <= m/64 rows map-side and
     # ships exactly one shuffle of <= m/64 rows per task at any scale.
-    positions = bench_toks.select(
+    positions = bench.select(tokens(F.col(text_col)).alias("_toks")).select(
         F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("_g")
     ).select(
         F.explode(
@@ -287,10 +275,9 @@ def bloom_decontaminate(
         "array(" + ",".join(f"{w}L" for w in words) + ")"
     )
 
-    base = train.select(
+    ex = train.select(
         F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    ).localCheckpoint()  # collapse barrier (see docstring)
-    ex = base.select(
+    ).select(
         F.col(id_col),
         F.explode_outer(shingles_from_tokens(F.col("_toks"), n)).alias("_g"),
     )

@@ -36,15 +36,22 @@ from ..session import free_local_checkpoint
 from ..sources.sinks import overwrite_partitions, upsert, write_snapshot
 
 
-def ops_file_stream(spark: SparkSession, ops_dir: str, schema: str, *, max_files_per_trigger: int = 1) -> DataFrame:
-    """File-based ops stream (block dumps landing as parquet). Rate is
-    bounded by maxFilesPerTrigger (T3)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("recursiveFileLookup", "true")  # block dumps land as dirs
-        .parquet(ops_dir)
-    )
+def ops_file_stream(
+    spark: SparkSession, ops_dir: str, schema: str, *,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-based ops stream (block dumps landing as parquet). By
+    default a trigger takes every file present, so the part files of
+    one landed write fold in one micro-batch: split by a cap, they are
+    taken in modification order and a reply can fold before its parent
+    written with it. Pass ``max_files_per_trigger`` to bound the rate
+    (T3)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.option(
+        "recursiveFileLookup", "true"  # block dumps land as dirs
+    ).parquet(ops_dir)
 
 
 def _fold_stream(
